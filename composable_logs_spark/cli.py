@@ -37,6 +37,7 @@ def pynb_log_parser(argv: list[str]) -> int:
 
     from .plans import summarize_spans
     from .sinks import make_mermaid_dag, make_mermaid_gantt, write_spans_to_directory
+    from .sinks.report import collect_report
     from .spanlog import read_span_json
 
     spark = _spark()
@@ -44,31 +45,27 @@ def pynb_log_parser(argv: list[str]) -> int:
     n = spans.count()
     print(f"--- pynb-log-parser (composable_logs_spark) ---")
     print(f"Number of spans loaded {n}")
-    summary = summarize_spans(spans)
-    run_ids = [r["run_id"] for r in summary.workflow_runs.select("run_id").collect()]
+    report = collect_report(summarize_spans(spans))  # every file renders from it
+    run_ids = [w["run_id"] for w in report.workflows]
 
     if args.output_directory is not None:
-        write_spans_to_directory(summary, args.output_directory)
+        write_spans_to_directory(report, args.output_directory)
 
     if args.output_filepath_mermaid_gantt is not None:
         out = args.output_filepath_mermaid_gantt
         out.parent.mkdir(parents=True, exist_ok=True)
-        out.write_text("\n".join(make_mermaid_gantt(summary, rid) for rid in run_ids))
+        out.write_text("\n".join(make_mermaid_gantt(report, rid) for rid in run_ids))
 
     if args.output_filepath_mermaid_dag is not None:
         out = args.output_filepath_mermaid_dag
         if out.suffix != ".mmd":
             raise SystemExit("--output_filepath_mermaid_dag must end in .mmd")
         out.parent.mkdir(parents=True, exist_ok=True)
-        dag_text = "\n".join(
-            make_mermaid_dag(summary, rid, generate_links=True) for rid in run_ids
-        )
-        out.write_text(dag_text)
         # reference also writes a -nolinks variant (cli_pynb_log_parser.py:134-146)
-        nolinks = "\n".join(
-            make_mermaid_dag(summary, rid, generate_links=False) for rid in run_ids
-        )
-        out.with_name(out.name.replace(".mmd", "-nolinks.mmd")).write_text(nolinks)
+        nolinks = out.with_name(out.name.replace(".mmd", "-nolinks.mmd"))
+        for path, links in ((out, True), (nolinks, False)):
+            dags = (make_mermaid_dag(report, rid, generate_links=links) for rid in run_ids)
+            path.write_text("\n".join(dags))
 
     print(" - Done")
     return 0

@@ -26,7 +26,7 @@ Design notes for scale:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +47,8 @@ class SpanSummary:
     logged_values: DataFrame
     artifacts: DataFrame
     validation_errors: DataFrame  # (run_id, task_span_id, kind, detail)
+    # the sinks' one-collect report (sinks.report.collect_report)
+    _report: object = field(default=None, init=False, repr=False, compare=False)
 
 
 def _with_run_id(spans: DataFrame) -> DataFrame:

@@ -12,11 +12,11 @@ multiple runs in one span table (an extension — the reference CLI is
 one-run-per-invocation) each run gets the reference layout inside its
 own ``{run_id}/`` subdirectory.
 
-The summary DataFrames are distributed; the artifact blobs are written
-from collected per-run partitions — a per-run reporting tree is small by
-construction (one workflow's artifacts), so driver-side writing matches
-the reference CLI. For bulk export of MANY runs use
-``df.write.partitionBy("run_id")`` on the artifacts table instead.
+The tree is rendered in plain Python from the collected report
+(``report.py``), as the reference CLI does: a per-run reporting tree is
+small by construction (one workflow's artifacts). For bulk export of
+MANY runs use ``df.write.partitionBy("run_id")`` on the artifacts table
+instead.
 """
 
 from __future__ import annotations
@@ -25,9 +25,8 @@ import json
 import re
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from ..plans.summarize import SpanSummary
+from .report import Report, collect_report
 
 
 def _safe_name(s: str) -> str:
@@ -54,16 +53,14 @@ def safe_path(base: Path, *parts: str) -> Path:
     return out
 
 
-def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[str]:
+def write_spans_to_directory(summary: SpanSummary | Report, out_dir: str | Path) -> list[str]:
     """Write the exploded per-task directory tree; returns created paths."""
     base = Path(out_dir)
     base.mkdir(parents=True, exist_ok=True)
     created: list[str] = []
 
-    workflows = {r["run_id"]: r.asDict() for r in summary.workflow_runs.collect()}
-    tasks = [r.asDict() for r in summary.task_runs.collect()]
-    artifacts = [r.asDict() for r in summary.artifacts.collect()]
-    values = [r.asDict() for r in summary.logged_values.collect()]
+    report = collect_report(summary)
+    workflows = {w["run_id"]: w for w in report.workflows}
 
     # single run -> reference-identical layout directly at out_dir
     def run_base(run_id: str) -> Path:
@@ -84,7 +81,7 @@ def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[
         p.write_text(json.dumps(meta, indent=2, default=str))
         created.append(str(p))
 
-    for t in tasks:
+    for t in report.tasks:
         status = "OK" if t["is_success"] else "FAILED"
         dir_name = "--".join(
             [
@@ -104,11 +101,7 @@ def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[
             "is_success": t["is_success"],
             "n_exceptions": t["n_exceptions"],
             "attributes": t["attributes"] or {},
-            "logged_values": {
-                v["name"]: _value_of(v)
-                for v in values
-                if v["task_span_id"] == t["span_id"] and v["run_id"] == t["run_id"]
-            },
+            "logged_values": report.task_values(t),
         }
         p = task_dir / "run-time-metadata.json"
         p.write_text(json.dumps(meta, indent=2, default=str))
@@ -116,20 +109,10 @@ def write_spans_to_directory(summary: SpanSummary, out_dir: str | Path) -> list[
 
         # artifacts live under an artifacts/ subdirectory
         # (cli_pynb_log_parser.py:76-81)
-        for a in artifacts:
-            if a["task_span_id"] == t["span_id"] and a["run_id"] == t["run_id"]:
-                ap = safe_path(
-                    rb, dir_name, "artifacts", _safe_artifact_name(a["name"])
-                )
-                ap.parent.mkdir(parents=True, exist_ok=True)
-                ap.write_bytes(bytes(a["content"]))
-                created.append(str(ap))
+        for a in report.task_artifacts(t):
+            ap = safe_path(rb, dir_name, "artifacts", _safe_artifact_name(a["name"]))
+            ap.parent.mkdir(parents=True, exist_ok=True)
+            ap.write_bytes(bytes(a["content"]))
+            created.append(str(ap))
 
     return created
-
-
-def _value_of(v: dict):
-    for k in ("value_str", "value_long", "value_double", "value_bool", "value_json"):
-        if v.get(k) is not None:
-            return v[k]
-    return None

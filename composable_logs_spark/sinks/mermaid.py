@@ -5,18 +5,16 @@ dag, :117-161 gantt; cli_pynb_log_parser.py:126-146): same comment
 banner, ``TASK_SPAN_ID_{span_id}`` node ids, ``<a href=...>`` task
 links with ``task.*`` attribute lines, ``generate_links`` flag, gantt
 sections per task with unix-epoch-second timestamps and ``dateFormat
-x``. Text formatting is presentation-layer and runs driver-side over
-the (small) per-run summary — the heavy lifting (summarisation) already
-happened distributed.
+x``. Both render one run from the collected report (``report.py``);
+tasks are ordered by ``(start_time, span_id)``.
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from ..plans.summarize import SpanSummary
+from .report import Report, collect_report
 
 
 def render_seconds(seconds: float) -> str:
@@ -49,21 +47,14 @@ def _make_link_to_task_run(attributes: dict, task_id: str, span_id: str) -> str:
 
 
 def make_mermaid_dag(
-    summary: SpanSummary, run_id: str, generate_links: bool = True
+    summary: SpanSummary | Report, run_id: str, generate_links: bool = True
 ) -> str:
     """Render one run's task DAG as mermaid 'graph LR' input-file text
-    (reference mermaid_graphs.py:49-114)."""
-    tasks = (
-        summary.task_runs.where(F.col("run_id") == run_id)
-        .select("span_id", "task_id", "task_type", "attributes", "is_success")
-        .orderBy("start_time")
-        .collect()
-    )
-    deps = (
-        summary.deps.where(F.col("run_id") == run_id)
-        .select("from_span_id", "to_span_id")
-        .collect()
-    )
+    (reference mermaid_graphs.py:49-114). Raises ``ValueError`` for a
+    run_id the summary does not hold."""
+    report = collect_report(summary)
+    tasks = report.run_tasks(run_id)
+    deps = report.deps_by_run.get(run_id, [])
     by_id = {t["span_id"]: t for t in tasks}
     lines = [
         "graph LR",
@@ -100,18 +91,12 @@ def make_mermaid_dag(
     return "\n".join(lines) + "\n"
 
 
-def make_mermaid_gantt(summary: SpanSummary, run_id: str) -> str:
+def make_mermaid_gantt(summary: SpanSummary | Report, run_id: str) -> str:
     """Render one run's tasks as a mermaid gantt input file
     (reference mermaid_graphs.py:117-161): one section per task,
-    unix-epoch-second timestamps with ``dateFormat x``."""
-    tasks = (
-        summary.task_runs.where(F.col("run_id") == run_id)
-        .select(
-            "task_id", "task_type", "start_time", "end_time", "duration_s", "is_success"
-        )
-        .orderBy("start_time")
-        .collect()
-    )
+    unix-epoch-second timestamps with ``dateFormat x``. Raises
+    ``ValueError`` for a run_id the summary does not hold."""
+    tasks = collect_report(summary).run_tasks(run_id)
     lines = [
         "gantt",
         "    %% Mermaid input file for drawing Gantt chart of runlog runtimes",

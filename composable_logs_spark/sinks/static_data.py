@@ -4,11 +4,9 @@ Reference: cli_generate_static_data.py:75-201 — union the workflow entry
 and task entries of every run into one ``static_data.json`` under a
 www-root, plus per-span artifact directories.
 
-Spark shape: ``workflow_runs ∪ task_runs`` via unionByName with missing
-columns (U3), serialised to one JSON document. The union is computed
-distributed; the final single-file write is a driver-side dump of the
-per-run reporting dataset (small). The mermaid artifacts per run reuse
-the S9 generators.
+Rendered in plain Python from the collected report (``report.py``), the
+same one the directory and Mermaid sinks use: a per-run reporting
+dataset is small, so the sink itself runs no Spark.
 """
 
 from __future__ import annotations
@@ -16,43 +14,13 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from ..plans.summarize import SpanSummary
 from .mermaid import make_mermaid_dag, make_mermaid_gantt
-
-
-def static_data_frame(summary: SpanSummary):
-    """The U3 union as a DataFrame (one row per workflow or task run)."""
-    wf = summary.workflow_runs.select(
-        F.lit("workflow").alias("entry_type"),
-        "run_id",
-        "span_id",
-        F.lit(None).cast("string").alias("task_id"),
-        F.lit(None).cast("string").alias("task_type"),
-        "start_time",
-        "end_time",
-        "duration_s",
-        "is_success",
-        "attributes",
-    )
-    tasks = summary.task_runs.select(
-        F.lit("task").alias("entry_type"),
-        "run_id",
-        "span_id",
-        "task_id",
-        "task_type",
-        "start_time",
-        "end_time",
-        "duration_s",
-        "is_success",
-        "attributes",
-    )
-    return wf.unionByName(tasks)
+from .report import Report, collect_report
 
 
 def write_static_data(
-    summary: SpanSummary, www_root: str | Path, with_mermaid: bool = True
+    summary: SpanSummary | Report, www_root: str | Path, with_mermaid: bool = True
 ) -> Path:
     """Reference-layout www-root (cli_generate_static_data.py:75-175):
     per-workflow reporting artifacts under ``artifacts/workflow/{span}/``
@@ -65,31 +33,26 @@ def write_static_data(
     subdirectory."""
     root = Path(www_root)
     root.mkdir(parents=True, exist_ok=True)
-    wf_rows = [r.asDict() for r in summary.workflow_runs.collect()]
-    task_rows = [r.asDict() for r in summary.task_runs.collect()]
-    art_rows = [r.asDict() for r in summary.artifacts.collect()]
-    val_rows = [r.asDict() for r in summary.logged_values.collect()]
-    single = len(wf_rows) == 1
+    report = collect_report(summary)
+    single = len(report.workflows) == 1
+    wf_span_of = {w["run_id"]: w["span_id"] for w in report.workflows}
 
     def art_base(run_id: str) -> Path:
         return root if single else root / run_id.replace("/", "-").replace(".", "-")
 
     entries = []
-    wf_span_of_run: dict[str, str] = {}
-    for wf in wf_rows:
-        wf_span_of_run[wf["run_id"]] = wf["span_id"]
+    for wf in report.workflows:
         adir = art_base(wf["run_id"]) / "artifacts" / "workflow" / wf["span_id"]
         adir.mkdir(parents=True, exist_ok=True)
         names: list[str] = []
         if with_mermaid:
-            (adir / "dag.mmd").write_text(
-                make_mermaid_dag(summary, wf["run_id"], generate_links=True)
-            )
-            (adir / "dag-nolinks.mmd").write_text(
-                make_mermaid_dag(summary, wf["run_id"], generate_links=False)
-            )
-            (adir / "gantt.mmd").write_text(make_mermaid_gantt(summary, wf["run_id"]))
-            names += ["dag.mmd", "dag-nolinks.mmd", "gantt.mmd"]
+            for name, text in (
+                ("dag.mmd", make_mermaid_dag(report, wf["run_id"])),
+                ("dag-nolinks.mmd", make_mermaid_dag(report, wf["run_id"], generate_links=False)),
+                ("gantt.mmd", make_mermaid_gantt(report, wf["run_id"])),
+            ):
+                (adir / name).write_text(text)
+                names.append(name)
         wf_meta = {
             "run_id": wf["run_id"],
             "span_id": wf["span_id"],
@@ -117,15 +80,14 @@ def write_static_data(
             }
         )
 
-    for t in task_rows:
+    for t in report.tasks:
         adir = art_base(t["run_id"]) / "artifacts" / "task" / t["span_id"]
         adir.mkdir(parents=True, exist_ok=True)
         names = []
-        for a in art_rows:
-            if a["task_span_id"] == t["span_id"] and a["run_id"] == t["run_id"]:
-                name = a["name"].replace("\\", "_").replace("/", "_")
-                (adir / name).write_bytes(bytes(a["content"]))
-                names.append(name)
+        for a in report.task_artifacts(t):
+            name = a["name"].replace("\\", "_").replace("/", "_")
+            (adir / name).write_bytes(bytes(a["content"]))
+            names.append(name)
         task_meta = {
             "run_id": t["run_id"],
             "span_id": t["span_id"],
@@ -140,7 +102,7 @@ def write_static_data(
             {
                 "entry_type": "task",
                 "type": "task",
-                "parent_span_id": wf_span_of_run.get(t["run_id"]),
+                "parent_span_id": wf_span_of.get(t["run_id"]),
                 "run_id": t["run_id"],
                 "span_id": t["span_id"],
                 "task_id": t["task_id"],
@@ -151,21 +113,10 @@ def write_static_data(
                 "is_success": t["is_success"],
                 "attributes": dict(t["attributes"] or {}),
                 "artifacts": names,
-                "logged_values": {
-                    v["name"]: _value_of(v)
-                    for v in val_rows
-                    if v["task_span_id"] == t["span_id"] and v["run_id"] == t["run_id"]
-                },
+                "logged_values": report.task_values(t),
             }
         )
 
     out = root / "static_data.json"
     out.write_text(json.dumps(entries, indent=2))
     return out
-
-
-def _value_of(v: dict):
-    for k in ("value_str", "value_long", "value_double", "value_bool", "value_json"):
-        if v.get(k) is not None:
-            return v[k]
-    return None

@@ -15,6 +15,18 @@ from .codec import SerializedData
 from . import schema as S
 
 BASE_TS = datetime.datetime(2023, 1, 1, 0, 0, 0, tzinfo=datetime.timezone.utc)
+_HOUR = datetime.timedelta(hours=1)
+_HOURS_BEFORE = (BASE_TS - datetime.datetime.min.replace(tzinfo=BASE_TS.tzinfo)) // _HOUR
+_HOURS_AFTER = (datetime.datetime.max.replace(tzinfo=BASE_TS.tzinfo) - BASE_TS) // _HOUR + 1
+
+
+def run_start(run_idx: int) -> datetime.datetime:
+    """``BASE_TS + run_idx`` hours. An index a datetime cannot hold wraps
+    into ``[0, _HOURS_AFTER)`` instead of overflowing; every index that
+    fits keeps its start, and with it the pinned summary digests."""
+    if not -_HOURS_BEFORE <= run_idx < _HOURS_AFTER:
+        run_idx %= _HOURS_AFTER
+    return BASE_TS + run_idx * _HOUR
 
 
 class SpanFixtureBuilder:
@@ -24,7 +36,7 @@ class SpanFixtureBuilder:
         self.trace_id = f"0x{run_idx:032x}"
         self._counter = 0
         self.spans: list[dict[str, Any]] = []
-        self._t0 = BASE_TS + datetime.timedelta(hours=run_idx)
+        self._t0 = run_start(run_idx)
         wf_attrs = {f"workflow.{k}" if not k.startswith("workflow.") else k: v
                     for k, v in (workflow_attributes or {}).items()}
         self.workflow_attributes = wf_attrs

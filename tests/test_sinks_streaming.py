@@ -4,6 +4,7 @@ import json
 import time
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from composable_logs_spark.plans import summarize_spans
@@ -13,6 +14,7 @@ from composable_logs_spark.sinks import (
     write_spans_to_directory,
     write_static_data,
 )
+from composable_logs_spark.sinks.report import collect_report
 from composable_logs_spark.spanlog import SpanWriter, read_span_jsonl
 from composable_logs_spark.spanlog import fixtures as FX
 from composable_logs_spark.streaming import SpanRecorder, stream_task_runs
@@ -129,6 +131,94 @@ def test_mermaid_gantt(spark):
     assert "    section input_1 (Python task)" in g
     assert "    section process (Python task)" in g
     assert " - OK : " in g
+
+
+def _jobs_in(spark, group: str) -> int:
+    """Spark jobs run so far under ``group``. The status store is filled
+    from the listener bus asynchronously, so drain the bus first."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sinks_render_collected_report_without_spark(spark, tmp_path):
+    s = summarize_spans(spans_df(spark, FX.compose3(0) + FX.parallel_fail(1)))
+    report = collect_report(s)
+    sc = spark.sparkContext
+    sc.setJobGroup("sinks-from-report", "render a collected report")
+    try:
+        write_spans_to_directory(report, tmp_path / "dir")
+        for w in report.workflows:
+            make_mermaid_dag(report, w["run_id"])
+            make_mermaid_gantt(report, w["run_id"])
+        write_static_data(report, tmp_path / "www")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _jobs_in(spark, "sinks-from-report") == 0
+    assert len(json.loads((tmp_path / "www" / "static_data.json").read_text())) == 8
+
+
+def test_sinks_share_one_collect_per_summary(spark, tmp_path):
+    s = summarize_spans(spans_df(spark, FX.logged_values_fixture(4)))
+    run_id = s.workflow_runs.first()["run_id"]  # outside the measured group
+    sc = spark.sparkContext
+    sc.setJobGroup("sinks-one-collect", "four sinks, one summary")
+    try:
+        write_spans_to_directory(s, tmp_path / "dir")
+        after_first = _jobs_in(spark, "sinks-one-collect")
+        make_mermaid_dag(s, run_id)
+        make_mermaid_gantt(s, run_id)
+        write_static_data(s, tmp_path / "www")
+        after_fourth = _jobs_in(spark, "sinks-one-collect")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after_first > 0
+    assert after_fourth == after_first
+
+
+def _dag_nodes(mmd: str) -> list[str]:
+    """Task ids of a no-links DAG's node lines, in order."""
+    return [ln.split('["')[1].split(" (")[0] for ln in mmd.splitlines() if '["' in ln]
+
+
+def test_mermaid_dag_scoped_to_its_run(spark):
+    # span ids collide across runs (counter-based per trace), so a DAG
+    # keyed on span ids alone would pull in the other run's nodes/edges
+    s = summarize_spans(spans_df(spark, FX.compose3(0) + FX.diamond5(2)))
+    tasks: dict[str, set] = {}
+    n_deps: dict[str, int] = {}
+    for r in s.task_runs.collect():
+        tasks.setdefault(r["run_id"], set()).add(r["task_id"])
+    for r in s.deps.collect():
+        n_deps[r["run_id"]] = n_deps.get(r["run_id"], 0) + 1
+    assert sorted(map(len, tasks.values())) == [3, 5]
+    assert sorted(n_deps.values()) == [2, 4]
+    for run_id, task_ids in tasks.items():
+        mmd = make_mermaid_dag(s, run_id, generate_links=False)
+        assert set(_dag_nodes(mmd)) == task_ids
+        assert mmd.count("-->") == n_deps[run_id]
+
+
+def test_mermaid_unknown_run_id_raises(spark):
+    s = summarize_spans(spans_df(spark, FX.compose3(0)))
+    for render in (make_mermaid_dag, make_mermaid_gantt):
+        with pytest.raises(ValueError, match="no-such-run"):
+            render(s, "no-such-run")
+
+
+def test_mermaid_equal_start_times_order_by_span_id(spark):
+    # twelve tasks all starting at t=0, task ids not in span-id order,
+    # spans loaded reversed: ties must break on span_id, not partitions
+    b = FX.SpanFixtureBuilder(0)
+    order = [f"task_{(7 * i) % 12:02d}" for i in range(12)]
+    for i, task_id in enumerate(order):
+        b.add_task(task_id, 0.0, 1.0 + i)
+    s = summarize_spans(spans_df(spark, b.build()[::-1]))
+    run_id = collect_report(s).workflows[0]["run_id"]
+    gantt = make_mermaid_gantt(s, run_id)
+    sections = [ln.split("section ")[1].split(" (")[0] for ln in gantt.splitlines() if "section" in ln]
+    assert sections == order
+    assert _dag_nodes(make_mermaid_dag(s, run_id, generate_links=False)) == order
 
 
 def test_static_data_sink(spark, tmp_path):

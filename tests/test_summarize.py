@@ -1,6 +1,8 @@
 """Golden tests for the parse_spans pipeline over FIXTURES.md A2 scenarios,
 mirroring the reference's round-trip assertions (SURVEY §5)."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -168,3 +170,17 @@ def test_attr_conflict_reported_and_winner_deterministic(spark):
         )
         outs.append(row["attributes"]["task.x"])
     assert outs == ["0", "0"]  # min("0", "1") — deterministic winner
+
+
+def test_fixture_run_index_past_datetime_range(spark):
+    # run_idx hours after BASE_TS: indices that fit keep their start
+    # (the pinned digests depend on it); others wrap, not overflow
+    hour = datetime.timedelta(hours=1)
+    for idx in (0, 255, 1023, FX._HOURS_AFTER - 1, -1, -FX._HOURS_BEFORE):
+        assert FX.run_start(idx) == FX.BASE_TS + idx * hour
+    assert FX.run_start(-FX._HOURS_BEFORE - 1) >= FX.BASE_TS
+    big = FX._HOURS_AFTER + 5  # raised OverflowError before wrapping
+    assert FX.run_start(big) == FX.BASE_TS + 5 * hour
+    s = summarize_spans(spans_df(spark, FX.compose3(big)))
+    got = {r["task_id"]: r["duration_s"] for r in s.task_runs.collect()}
+    assert got == {"input_1": 1.0, "input_2": 1.5, "process": 1.25}
