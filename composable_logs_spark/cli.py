@@ -45,7 +45,9 @@ def pynb_log_parser(argv: list[str]) -> int:
     n = spans.count()
     print(f"--- pynb-log-parser (composable_logs_spark) ---")
     print(f"Number of spans loaded {n}")
-    report = collect_report(summarize_spans(spans))  # every file renders from it
+    summary = summarize_spans(spans)
+    report = collect_report(summary)  # every file renders from it
+    summary.release()
     run_ids = [w["run_id"] for w in report.workflows]
 
     if args.output_directory is not None:
@@ -102,7 +104,10 @@ def generate_static_data(argv: list[str]) -> int:
     spans = read_spans_from_zip(spark, zips)
     print(f"Loaded {spans.count()} spans from {len(zips)} zip(s)")
     summary = summarize_spans(spans)
-    out = write_static_data(summary, args.output_www_root_directory)
+    try:
+        out = write_static_data(summary, args.output_www_root_directory)
+    finally:
+        summary.release()
     print(f"Wrote {out}")
     return 0
 

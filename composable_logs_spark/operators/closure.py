@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_MAX_DEPTH = 8
+from ..spanlog.schema import MAX_SPAN_DEPTH as DEFAULT_MAX_DEPTH
 
 _JOIN_KEYS = ["run_id", "span_id"]
 

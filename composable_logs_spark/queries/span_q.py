@@ -28,7 +28,7 @@ _FIXTURE_MEMO: dict = {}
 def _spans_df(spark: SparkSession, span_dicts) -> DataFrame:
     # memoized per (session, fixture): repeated calls then return the SAME
     # leaf DataFrame, so downstream plans canonicalize equal and the
-    # caches inside summarize_spans/descendants HIT instead of piling up
+    # cache inside summarize_spans HITs instead of piling up
     # one orphaned cache entry per call (each parallelize() is a fresh RDD).
     # Keyed by applicationId, NOT id(spark) (r11 verdict): a GC'd and
     # re-created session can alias the same id() and serve a DataFrame

@@ -1,22 +1,26 @@
-"""One run report: each summary table collected once, then rendered by
-the directory, Mermaid and static-data sinks without running Spark.
-Plain ``collect()``, not Arrow: pandas types would change the JSON
-bytes, and at a few hundred rows a table the cost is per job.
+"""One run report: the summary's per-run frame collected once, then
+rendered by the directory, Mermaid and static-data sinks without running
+Spark. Plain ``collect()``, not Arrow: pandas types would change the JSON
+bytes, and at a few hundred rows the cost is per job.
+
+Every list has an explicit order, independent of Spark's partitioning:
+workflows by ``run_id``, tasks by ``(start_time, span_id)``, deps by
+``(to_span_id, from_span_id)``; values and artefacts keep the summary's
+``(start_time, span_id)`` span order, so a later duplicate name wins.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from operator import itemgetter
 
-from ..plans.summarize import SpanSummary
+from ..plans.summarize import SpanSummary, nulls_first
 
 
 @dataclass
 class Report:
     workflows: list[dict]  # workflow_runs rows
     tasks: list[dict]  # task_runs rows
-    tasks_by_run: dict[str, list[dict]]  # ordered by (start_time, span_id)
+    tasks_by_run: dict[str, list[dict]]
     deps_by_run: dict[str, list[dict]]
     artifacts_by_task: dict[tuple[str, str], list[dict]]  # (run_id, task_span_id)
     values_by_task: dict[tuple[str, str], list[dict]]
@@ -30,7 +34,7 @@ class Report:
         return self.artifacts_by_task.get((t["run_id"], t["span_id"]), [])
 
     def task_values(self, t: dict) -> dict:
-        """name -> value; a later duplicate name wins, as in row order."""
+        """name -> value; a later duplicate name wins, as in span order."""
         return {
             v["name"]: _value_of(v)
             for v in self.values_by_task.get((t["run_id"], t["span_id"]), [])
@@ -42,14 +46,10 @@ def _value_of(v: dict):
     return next((v[k] for k in cols if v[k] is not None), None)
 
 
-def _rows(df) -> list[dict]:
-    return [r.asDict() for r in df.collect()]
-
-
-def _group(rows: list[dict], key) -> dict:
+def _by_task(run_id: str, rows: list[dict]) -> dict:
     out: dict = {}
     for r in rows:
-        out.setdefault(key(r), []).append(r)
+        out.setdefault((run_id, r["task_span_id"]), []).append({"run_id": run_id, **r})
     return out
 
 
@@ -60,25 +60,25 @@ def collect_report(source: SpanSummary | Report) -> Report:
     if isinstance(source, Report):
         return source
     if source._report is None:
-        # task_runs first: it fills the summary caches the others read. It
-        # stays cached while workflow_runs, which aggregates it, is collected
-        task_runs = source.task_runs.cache()
-        try:
-            tasks, workflows = _rows(task_runs), _rows(source.workflow_runs)
-        finally:
-            task_runs.unpersist()
-        # nulls first, as Spark's ascending sort; span_id breaks ties
-        ordered = sorted(
-            tasks,
-            key=lambda t: (t["start_time"] is not None, t["start_time"] or 0, t["span_id"]),
+        runs = sorted(
+            (r.asDict(recursive=True) for r in source.runs.collect()),
+            key=lambda r: nulls_first(r["run_id"]),
         )
-        by_run, by_task = itemgetter("run_id"), itemgetter("run_id", "task_span_id")
-        source._report = Report(
-            workflows=workflows,
-            tasks=tasks,
-            tasks_by_run={w["run_id"]: [] for w in workflows} | _group(ordered, by_run),
-            deps_by_run=_group(_rows(source.deps), by_run),
-            artifacts_by_task=_group(_rows(source.artifacts), by_task),
-            values_by_task=_group(_rows(source.logged_values), by_task),
-        )
+        report = Report([], [], {}, {}, {}, {})
+        for r in runs:
+            rid = r["run_id"]
+            report.workflows += [{"run_id": rid, **w} for w in r["workflow_runs"]]
+            tasks = [{"run_id": rid, **t} for t in r["task_runs"]]
+            report.tasks += tasks
+            report.tasks_by_run[rid] = sorted(
+                tasks, key=lambda t: nulls_first(t["start_time"], t["span_id"])
+            )
+            report.deps_by_run[rid] = sorted(
+                ({"run_id": rid, **d} for d in r["deps"]),
+                key=lambda d: nulls_first(d["to_span_id"], d["from_span_id"]),
+            )
+            report.artifacts_by_task |= _by_task(rid, r["artifacts"])
+            report.values_by_task |= _by_task(rid, r["logged_values"])
+        report.tasks.sort(key=lambda t: nulls_first(t["start_time"], t["span_id"], t["run_id"]))
+        source._report = report
     return source._report

@@ -4,16 +4,16 @@ row counts, not correctness-fixture counts.
 The golden fixtures (``fixtures.py``) are ~10^2 spans per scenario;
 every spanlog_* gate query is proven on them. This module generates the
 same span shapes at ~10^6 spans (hundreds of runs x hundreds of tasks)
-so the closure-join summarisation pipeline can be BENCHED at meaningful
+so the summarisation pipeline can be BENCHED at meaningful
 scale: deep dependency chains, wide fan-outs, layered diamonds, failure
 plants, logged values — all counter-deterministic (same args => byte-
 identical log), so benchmarks and invariant tests are reproducible.
 
 Structure note: DAG depth here means task-DEPENDENCY depth (links),
 which the summarisation never traverses iteratively; the PARENT tree
-that the bounded closure walks stays ~4 deep by construction (dag-top ->
+that the ownership walk follows stays ~4 deep by construction (dag-top ->
 task -> guard -> call -> data) exactly as the reference emits it, so
-closure cost scales with ROWS, not DAG shape — the property the bench
+summarisation cost scales with ROWS, not DAG shape — the property the bench
 exists to demonstrate.
 """
 

@@ -81,6 +81,12 @@ SPAN_SCHEMA = T.StructType(
     ]
 )
 
+# Span trees have a hard structural depth bound: dag-top-span ->
+# execute-task -> timeout-guard -> call-python-function ->
+# named-value/artefact, plus a notebook level (FIXTURES.md: depth <= 6).
+# Ancestor walks stop after this many hops, a margin over that bound.
+MAX_SPAN_DEPTH = 8
+
 # Well-known span names (the row-type discriminator).
 SPAN_DAG_TOP = "dag-top-span"
 SPAN_EXECUTE_TASK = "execute-task"

@@ -84,7 +84,10 @@ def stream_task_runs(
         if batch_df.isEmpty():
             return
         summary = summarize_spans(batch_df)
-        on_batch(summary.task_runs, batch_id)
+        try:
+            on_batch(summary.task_runs, batch_id)
+        finally:
+            summary.release()  # an always-on stream must not pile up caches
 
     writer = stream.writeStream.foreachBatch(handle).outputMode("append")
     if checkpoint_dir:

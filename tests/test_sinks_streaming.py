@@ -394,3 +394,38 @@ def test_static_data_reference_layout(spark, tmp_path):
     assert (tdir / "plot.png").read_bytes() == bytes(range(256)) * 4
     assert "run-time-metadata.json" in h["artifacts"]
     assert h["logged_values"]["an_int"] == 42
+
+
+def test_release_keeps_persistent_rdds_flat(spark):
+    # every summary caches its per-run frame; release() must drop it, or
+    # a long-lived caller (a stream, a server) piles up cached RDDs
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    counts = []
+    for i in range(4):
+        s = summarize_spans(spans_df(spark, FX.compose3(10 + i)))
+        collect_report(s)
+        assert jsc.getPersistentRDDs().size() > before  # the cache is live
+        s.release()
+        counts.append(jsc.getPersistentRDDs().size())
+    assert counts == [before] * 4
+
+
+def test_report_bytes_independent_of_shuffle_partitions(spark, tmp_path):
+    spans = (
+        FX.compose3(0) + FX.parallel_fail(1) + FX.diamond5(2)
+        + FX.logged_values_fixture(4) + FX.notebook_ok(5)
+    )
+    outs = []
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (2, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            s = summarize_spans(spans_df(spark, spans))
+            www = write_static_data(s, tmp_path / f"www{n}")
+            run_id = collect_report(s).workflows[2]["run_id"]
+            outs.append((www.read_bytes(), make_mermaid_dag(s, run_id)))
+            s.release()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert outs[0] == outs[1]

@@ -184,3 +184,47 @@ def test_fixture_run_index_past_datetime_range(spark):
     s = summarize_spans(spans_df(spark, FX.compose3(big)))
     got = {r["task_id"]: r["duration_s"] for r in s.task_runs.collect()}
     assert got == {"input_1": 1.0, "input_2": 1.5, "process": 1.25}
+
+
+def _fixture_mix():
+    """Every FX fixture as its own run (span ids collide across runs),
+    plus an attribute conflict and repeated artefact/notebook runs."""
+    spans = [s for make in FX.ALL_FIXTURES.values() for s in make()]
+    conflict = FX.compose3(7)
+    task = next(s for s in conflict if s["attributes"].get("task.id") == "input_1")
+    child = next(s for s in conflict if s.get("parent_id") == task["context"]["span_id"])
+    child["attributes"]["task.x"] = "0"
+    return spans + conflict + FX.logged_values_fixture(8) + FX.notebook_ok(9)
+
+
+def test_fixture_mix_digests_pinned(spark):
+    # summaries_digest skips artifacts and validation_errors; pin them
+    # (and the other four) on a mix that has rows in both
+    from composable_logs_spark.spanlog.digest import multiset_digest, summaries_digest
+
+    s = summarize_spans(spans_df(spark, _fixture_mix()))
+    got = summaries_digest(s) | {
+        "artifacts": multiset_digest(s.artifacts),
+        "validation_errors": multiset_digest(s.validation_errors),
+    }
+    assert got == {
+        "task_runs": (24, 12477902960759, 12479368760303),
+        "workflow_runs": (10, 6444064957738, 6444629283334),
+        "deps": (12, 6027154402608, 6027673008564),
+        "logged_values": (20, 11330572398875, 11331494328671),
+        "artifacts": (8, 3864242799182, 3864468538622),
+        "validation_errors": (2, 1732383012932, 1732427489384),
+    }
+
+
+def test_run_above_span_limit_fails_naming_the_run(spark, monkeypatch):
+    from pyspark.errors import PythonException
+
+    import composable_logs_spark.plans.summarize as summarize
+
+    monkeypatch.setattr(summarize, "MAX_SPANS_PER_RUN", 3)
+    s = summarize_spans(spans_df(spark, FX.parallel_fail(1)))
+    run_id = FX.parallel_fail(1)[0]["context"]["trace_id"]
+    # raised in the Python worker; Spark re-raises it wrapped, traceback kept
+    with pytest.raises(PythonException, match=rf"ValueError: run '{run_id}' has \d+ spans"):
+        s.task_runs.collect()
