@@ -2,186 +2,94 @@
 
 The reference walks a driver-side "union of directed trees" with
 recursive DFS (UDT.traverse_from, opentelemetry_helpers.py:295-308).
-Spark has no recursive CTE, but span trees have a hard structural depth
-bound — dag-top-span → execute-task → timeout-guard →
-call-python-function → named-value/artefact, plus a notebook level —
-so an iterative self-join with a fixed depth budget computes the EXACT
-closure (FIXTURES.md invariant: depth ≤ 6; we default to 8 for margin).
+``descendants`` does the same walk one run at a time: one
+``groupBy("run_id").applyInArrow`` hands each run's edge rows to plain
+Python, which walks up from every edge row through a child -> parents
+map (``spanlog.schema.span_ancestors``, the walk ``summarize_run`` also
+uses). Span trees have a hard structural depth bound (FIXTURES.md
+invariant: depth <= 6; the walk stops at 8 hops for margin), so the
+result is the exact closure, computed with one shuffle and nothing
+cached.
 
 All linkage is keyed by (run_id, span_id): OTel span ids are unique only
 within one trace, and a 100 TB log holds millions of traces.
-
-Scale notes: each iteration is one shuffle join on (run_id, span_id);
-with depth ≤ 8 this is ≤ 8 shuffles TOTAL regardless of data size, and
-every frontier shrinks. For forests far deeper than the budget, pass a
-larger ``max_depth`` or switch to doubling (closure ⋈ closure), which
-needs only log2(depth) joins.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..spanlog.schema import MAX_SPAN_DEPTH as DEFAULT_MAX_DEPTH
+from ..spanlog import schema as S
+from ..spanlog.schema import MAX_SPAN_DEPTH as DEFAULT_MAX_DEPTH, MAX_SPANS_PER_RUN
 
-_JOIN_KEYS = ["run_id", "span_id"]
+_CLOSURE_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("ancestor_span_id", pa.string()),
+        ("span_id", pa.string()),
+        ("depth", pa.int32()),
+    ]
+)
+
+
+def _walk_run(table: pa.Table, max_depth: int, validate: bool, max_spans: int) -> pa.Table:
+    """One run's closure rows. Join semantics: every edge row walks up
+    on its own, and a null id (run, parent or span) matches no row."""
+    c = table.to_pydict()
+    run_id = c["run_id"][0]
+    S.check_run_size(run_id, table.num_rows, max_spans)
+    rows = list(zip(c["parent_span_id"], c["span_id"]))
+    parents: dict[str, list] = {}
+    if run_id is not None:
+        for p, s in rows:
+            if s is not None:
+                parents.setdefault(s, []).append(p)
+    # walk one hop further under ``validate``, only to see whether it exists
+    walk_depth = max_depth + 1 if validate else max_depth
+    ancestors, spans, depths = [], [], []
+    for p, s in rows:
+        for a, depth in S.span_ancestors(parents, p, walk_depth):
+            if depth > max_depth:
+                raise ValueError(
+                    f"run {run_id!r} has a span path deeper than max_depth={max_depth}"
+                )
+            ancestors.append(a)
+            spans.append(s)
+            depths.append(depth)
+    return pa.table(
+        {
+            "run_id": [run_id] * len(depths),
+            "ancestor_span_id": ancestors,
+            "span_id": spans,
+            "depth": depths,
+        },
+        schema=_CLOSURE_SCHEMA,
+    )
 
 
 def descendants(
     edges: DataFrame, max_depth: int = DEFAULT_MAX_DEPTH, validate: bool = False
 ) -> DataFrame:
-    """All (run_id, ancestor_span_id, span_id, depth) pairs, depth >= 1.
+    """All (run_id, ancestor_span_id, span_id, depth) pairs, 1 <= depth <=
+    ``max_depth``, one row per path of edge rows.
 
     ``edges`` must have columns (run_id, parent_span_id, span_id) — see
     ``spans_ops.span_edges``. Equivalent to the reference's
-    UDT.traverse_from for every root at once (opentelemetry_helpers.py:295-308)
-    but set-at-a-time: one closure table reused by every consumer, fixing
-    the reference's 3-traversals-per-task hazard
-    (opentelemetry_task_span_parser.py:385,405,408-409; SURVEY §4).
+    UDT.traverse_from for every root at once (opentelemetry_helpers.py:295-308),
+    as one lazy relation.
 
-    With ``validate`` an extra pass asserts the forest really fits inside
-    ``max_depth``.
+    With ``validate``, evaluating the result fails with a ``ValueError``
+    naming the run when a path longer than ``max_depth`` exists; so does a
+    run above ``MAX_SPANS_PER_RUN`` edge rows.
     """
-    # Shuffle the (big) edge side ONCE: cached hash-partitioned on the
-    # join key, every per-depth join below reuses that partitioning and
-    # only exchanges the (shrinking) frontier side — ≤1 full-edge shuffle
-    # total instead of one per depth.
-    edges = edges.select("run_id", "parent_span_id", "span_id").repartition(
-        "run_id", "parent_span_id"
-    ).cache()
-    base = edges.select(
-        "run_id",
-        F.col("parent_span_id").alias("ancestor_span_id"),
-        F.col("span_id"),
-        F.lit(1).alias("depth"),
-    ).cache()
-
-    def _extend(frontier: DataFrame, d: int) -> DataFrame:
-        # shuffle_hash hint (r13, the operators/components.py lesson):
-        # a million-span log's narrow edge table sits UNDER the 64 MB
-        # autoBroadcast threshold, so without the hint Spark
-        # driver-collects and broadcasts the FULL edge relation at
-        # every depth (measured on the 940k-span fixture: a 56 MB
-        # BroadcastExchange per step), ignoring the hash partitioning
-        # the repartition above paid for — and a broadcast of the
-        # input-sized edge relation is impossible at archive scale.
-        # The hint pins the shuffled hash join: the cached edge side
-        # reuses its exchange, only the (shrinking) frontier — the
-        # build side — moves. Measured: big-fixture summarize
-        # 15.6 -> 14.3 s min-of-3; the tiny-fixture gate queries pay
-        # ~0.1 s for the scale-correct shape (same trade
-        # components.py documents).
-        return (
-            frontier.alias("f")
-            .hint("shuffle_hash")
-            .join(
-                edges.alias("e"),
-                (F.col("f.span_id") == F.col("e.parent_span_id"))
-                & (F.col("f.run_id") == F.col("e.run_id")),
-                "inner",
-            )
-            .select(
-                F.col("f.run_id"),
-                F.col("f.ancestor_span_id"),
-                F.col("e.span_id"),
-                F.lit(d).alias("depth"),
-            )
-        )
-
-    # Per-depth early exit keeps the FINAL plan roughly as deep as the
-    # actual forest (2-3 joins for typical span trees) instead of
-    # max_depth joins. A fully lazy 8-join plan was measured 3-10x slower
-    # end-to-end on shallow forests — consumers pay plan depth on every
-    # reuse. (Trees: no cycles, so no visited-set needed.)
-    #
-    # Lineage truncation past the typical budget: under AQE, every cached
-    # step's printed plan embeds its child's full adaptive plan, so the
-    # eager explain-string built per action grows ~2x per nesting level —
-    # a 20-deep chain of cached steps stalls the driver for MINUTES in
-    # generateTreeString alone. Past DEFAULT_MAX_DEPTH we switch the
-    # step from cache() to eager localCheckpoint(), which cuts the
-    # logical plan to a flat scan (constant-size per step, linear total).
-    # Costs: recompute-on-executor-loss is gone for those steps (fine —
-    # they're materialized once, consumed once).
-    # VERDICT r1 #5: the per-depth isEmpty() actions dominated wall time
-    # on small inputs (~1 job per level plus cache materialisation).
-    # Two changes: (a) early-exit via count(), which FULLY materialises
-    # the cached step in the same job the check pays for, and (b) check
-    # only every other level — the final plan gains at most one empty
-    # join level, but fixed job overhead halves.
-    closure = base
-    frontier = base
-    for d in range(2, max_depth + 1):
-        step = _extend(frontier, d)
-        if d > DEFAULT_MAX_DEPTH:
-            step = step.localCheckpoint(eager=True)
-        else:
-            step = step.cache()
-        if (d % 2 == 1 or d == max_depth) and step.count() == 0:
-            frontier = step
-            break
-        closure = closure.unionByName(step)
-        frontier = step
-
-    if validate and not frontier.isEmpty():
-        if not _extend(frontier, max_depth + 1).isEmpty():
-            raise ValueError(
-                f"span forest deeper than max_depth={max_depth}; raise the budget"
-            )
-    return closure
-
-
-def descendants_doubling(edges: DataFrame, max_depth: int = 1 << 16) -> DataFrame:
-    """Exponential-doubling closure: reachability in log2(depth) joins.
-
-    Each round joins the current closure with itself (paths of length
-    ≤ 2^k), so forests of depth 65k need only 16 self-joins — the right
-    variant when the forest is DEEP (lineage chains, comment threads),
-    where the per-level iterative walk would need one shuffle per level.
-    Returns (run_id, ancestor_span_id, span_id) with min path depth
-    omitted (reachability only).
-
-    For the shallow span forests of this engine the fixed-depth
-    ``descendants`` is faster; this exists for the deep-graph case and is
-    equivalence-tested against it.
-    """
-    # localCheckpoint, NOT cache: each round references the previous
-    # closure three times (union + both join sides), so a cached lineage
-    # grows 3^k logical nodes — and under AQE the eager explain-string
-    # per action doubles again per nesting level. Checkpointing flattens
-    # each round's plan to a scan, the standard Spark idiom for iterative
-    # fixpoints (same pattern as GraphX/connected-components loops).
-    closure = edges.select(
-        "run_id",
-        F.col("parent_span_id").alias("ancestor_span_id"),
-        "span_id",
-    ).localCheckpoint(eager=True)
-    n = closure.count()
-    reach = 1
-    while reach < max_depth:
-        step = (
-            closure.alias("l")
-            .join(
-                closure.alias("r"),
-                (F.col("l.span_id") == F.col("r.ancestor_span_id"))
-                & (F.col("l.run_id") == F.col("r.run_id")),
-                "inner",
-            )
-            .select(F.col("l.run_id"), F.col("l.ancestor_span_id"), F.col("r.span_id"))
-        )
-        new_closure = (
-            closure.unionByName(step)
-            .dropDuplicates(["run_id", "ancestor_span_id", "span_id"])
-            .localCheckpoint(eager=True)
-        )
-        # fixpoint: stop when no new pairs appear
-        new_n = new_closure.count()
-        if new_n == n:
-            break
-        closure, n = new_closure, new_n
-        reach *= 2
-    return closure
+    limit = MAX_SPANS_PER_RUN  # read on the driver; travels with the lambda
+    return edges.select("run_id", "parent_span_id", "span_id").groupBy("run_id").applyInArrow(
+        lambda table: _walk_run(table, max_depth, validate, limit),
+        from_arrow_schema(_CLOSURE_SCHEMA),
+    )
 
 
 def bound_under(

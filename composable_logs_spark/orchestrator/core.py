@@ -403,12 +403,7 @@ def _run_body_in_process(
     return error, value
 
 
-_run_counter = threading.Lock()
-_run_seq = [0]
-
-
 def _new_trace_id() -> str:
-    import os as _os
     import uuid
 
     return "0x" + uuid.uuid4().hex

@@ -49,9 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..spanlog import schema as S
-
-# One run is summarised in one Python worker's memory.
-MAX_SPANS_PER_RUN = 1_000_000
+from ..spanlog.schema import MAX_SPANS_PER_RUN
 
 
 def _view(table: str) -> property:
@@ -152,27 +150,24 @@ def summarize_run(table: pa.Table, max_spans: int) -> pa.Table:
     """
     c = table.to_pydict()
     run_id, n = c["run_id"][0], table.num_rows
-    if n > max_spans:
-        raise ValueError(f"run {run_id!r} has {n} spans, above MAX_SPANS_PER_RUN={max_spans}")
+    S.check_run_size(run_id, n, max_spans)
     sid, parent, name = c["span_id"], c["parent_id"], c["name"]
     start, end = c["start_us"], c["end_us"]
     order = sorted(range(n), key=lambda i: nulls_first(start[i], sid[i]))
 
-    parent_of = {s: p for s, p in zip(sid, parent) if s is not None}
+    # one parent per span id (its last row's), as span_ancestors' child -> parents map
+    parent_of = {s: (p,) for s, p in zip(sid, parent) if s is not None}
     tasks = {sid[i]: _Task(i) for i in order if name[i] == S.SPAN_EXECUTE_TASK}
 
     def owners(i: int) -> list[_Task]:
         if sid[i] is None:
             return []
         out = [tasks[sid[i]]] if name[i] == S.SPAN_EXECUTE_TASK else []
-        p = parent[i]
-        for _ in range(S.MAX_SPAN_DEPTH):
-            if p is None:
-                break
-            if p in tasks:
-                out.append(tasks[p])
-            p = parent_of.get(p)
-        return out
+        return out + [
+            tasks[a]
+            for a, _ in S.span_ancestors(parent_of, parent[i])
+            if a is not None and a in tasks
+        ]
 
     wf_union: dict[str, set] = {}
     deps: dict[tuple, None] = {}  # insertion-ordered set

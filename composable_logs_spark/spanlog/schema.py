@@ -18,6 +18,7 @@ task_opentelemetry_logging.py:222-226).
 from __future__ import annotations
 
 import datetime
+from collections.abc import Mapping, Sequence
 from typing import Any
 
 from pyspark.sql import types as T
@@ -86,6 +87,40 @@ SPAN_SCHEMA = T.StructType(
 # named-value/artefact, plus a notebook level (FIXTURES.md: depth <= 6).
 # Ancestor walks stop after this many hops, a margin over that bound.
 MAX_SPAN_DEPTH = 8
+
+# Per-run work holds one run's spans in one Python worker's memory.
+MAX_SPANS_PER_RUN = 1_000_000
+
+
+def check_run_size(run_id: str | None, n: int, max_spans: int) -> None:
+    """Fail loudly, naming the run, when it is too big for one worker."""
+    if n > max_spans:
+        raise ValueError(f"run {run_id!r} has {n} spans, above MAX_SPANS_PER_RUN={max_spans}")
+
+
+def span_ancestors(
+    parents: Mapping[str, Sequence[str | None]],
+    parent: str | None,
+    max_depth: int = MAX_SPAN_DEPTH,
+) -> list[tuple[str | None, int]]:
+    """``(ancestor_id, depth)`` for every upward path of 1 to ``max_depth``
+    hops from a span whose parent is ``parent`` (depth 1 is ``parent``).
+
+    ``parents`` maps a span id to the parent ids of its edge rows, one
+    entry per row, so a duplicated row doubles the paths through it. It
+    has no ``None`` key: a null id has no parents, so a walk that reaches
+    one stops there. The reference's per-run walk is UDT.traverse_from
+    (opentelemetry_helpers.py:295-308).
+    """
+    found, stack = [], [(parent, 1)]
+    while stack:
+        a, depth = stack.pop()
+        found.append((a, depth))
+        if depth < max_depth:
+            for p in parents.get(a, ()):
+                stack.append((p, depth + 1))
+    return found
+
 
 # Well-known span names (the row-type discriminator).
 SPAN_DAG_TOP = "dag-top-span"

@@ -6,6 +6,9 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+import composable_logs_spark.operators.closure as closure
+import composable_logs_spark.plans.summarize as summarize
+from composable_logs_spark.operators import span_edges
 from composable_logs_spark.plans import summarize_spans
 from composable_logs_spark.spanlog import fixtures as FX
 
@@ -217,14 +220,20 @@ def test_fixture_mix_digests_pinned(spark):
     }
 
 
-def test_run_above_span_limit_fails_naming_the_run(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "module, run",
+    [
+        (summarize, lambda spans: summarize_spans(spans).task_runs),
+        (closure, lambda spans: closure.descendants(span_edges(spans))),
+    ],
+    ids=["summarize", "descendants"],
+)
+def test_run_above_span_limit_fails_naming_the_run(spark, monkeypatch, module, run):
     from pyspark.errors import PythonException
 
-    import composable_logs_spark.plans.summarize as summarize
-
-    monkeypatch.setattr(summarize, "MAX_SPANS_PER_RUN", 3)
-    s = summarize_spans(spans_df(spark, FX.parallel_fail(1)))
+    monkeypatch.setattr(module, "MAX_SPANS_PER_RUN", 3)  # read when the plan is built
+    out = run(spans_df(spark, FX.parallel_fail(1)))
     run_id = FX.parallel_fail(1)[0]["context"]["trace_id"]
     # raised in the Python worker; Spark re-raises it wrapped, traceback kept
     with pytest.raises(PythonException, match=rf"ValueError: run '{run_id}' has \d+ spans"):
-        s.task_runs.collect()
+        out.collect()
