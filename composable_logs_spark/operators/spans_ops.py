@@ -160,11 +160,14 @@ def assert_no_conflicts(attr_union: DataFrame) -> dict[str, str]:
 
 
 def new_spans(spans: DataFrame, seen_span_ids: DataFrame) -> DataFrame:
-    """U1/S5: snapshot-diff — spans whose id is not in the seen set
-    (reference: SpanRecorder.__exit__, opentelemetry_helpers.py:540-546).
-    ``seen_span_ids`` must have a ``span_id`` column."""
+    """U1/S5: snapshot-diff — spans not in the seen set (reference:
+    SpanRecorder.__exit__, opentelemetry_helpers.py:540-546). Span ids
+    are unique only per trace, so ``seen_span_ids`` carries ``trace_id``
+    and ``span_id`` columns and the diff keys on both."""
+    seen = seen_span_ids.select("trace_id", "span_id")
     return spans.join(
-        seen_span_ids.select("span_id"),
-        spans["context.span_id"] == seen_span_ids["span_id"],
+        seen,
+        (spans["context.trace_id"] == seen["trace_id"])
+        & (spans["context.span_id"] == seen["span_id"]),
         "left_anti",
     )

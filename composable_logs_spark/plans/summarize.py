@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..spanlog import schema as S
+from ..spanlog.codec import decode_columns
 from ..spanlog.schema import MAX_SPANS_PER_RUN
 
 
@@ -319,14 +320,10 @@ def _finish(runs: DataFrame) -> DataFrame:
         ]
 
     def value(v):
-        typ, content = v["type"], v["content_encoded"]
+        typed = decode_columns(v["type"], v["content_encoded"])
         return F.struct(
             *_fields(v, "task_span_id", "name", "type"),
-            F.when(typ == "utf-8", content).alias("value_str"),
-            F.when(typ == "int", content.cast("long")).alias("value_long"),
-            F.when(typ == "float", content.cast("double")).alias("value_double"),
-            F.when(typ == "bool", content.cast("boolean")).alias("value_bool"),
-            F.when(typ == "json", content).alias("value_json"),
+            *(c.alias(n) for n, c in typed.items()),
         )
 
     def artifact(a):

@@ -15,6 +15,7 @@ differences between engines can't flip the hash.
 
 from __future__ import annotations
 
+import importlib
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -79,222 +80,29 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-# Registry order is a VERIFICATION SURFACE: the driver's correctness gate
-# checks the first 50 entries, so the front window is pinned EXPLICITLY by
-# name (tests/test_registry_window.py guards it — including an executable
-# rotation-policy lock computed from the committed CORRECTNESS_r*.json
-# records). Rotation policy per round: (1) every query that has never had
-# a driver hash-green row, (2) every query whose semantics, oracle or
-# physical plan changed this round, (3) fill with the longest-unverified
-# green block in name order. Round 14 window: no rule-(1) names (every
-# registry query has at least one driver-green row); rule (3)'s stalest
-# block — the 19 names whose newest green is r9 — fits and leads; rule
-# (2) seats this round's optimization-touched queries (jaccard family
-# dictionary encoding, RRF panel streaming, ccnet LM specialization,
-# summarize ownership cache, substr tok-precedence, BPE adaptive
-# trainer) plus the r13 Arrow-rewritten set the r13 verdict flagged as
-# never driver-verified (item 7). Spillover for r15: the other 7
-# spanlog_* names, table_profile_lineitem, dedup_minhash_est_error.
-_FRONT_WINDOW = [
-    # (3) the whole stalest block first — every name whose newest driver
-    # hash-green row is r9, the registry minimum (the rotation lock
-    # test_registry_window computes this from the committed
-    # CORRECTNESS_r*.json records; the block fits, so all 19 seats)
-    "q2_min_cost_supplier", "q4_late_order_priority", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "retention_cohorts", "sample_quality_weighted", "sample_stratified_hash",
-    "scd2_user_history", "session_window_stats", "stream_dedup_events",
-    "stream_sliding_counts", "stream_tumbling_counts", "text_classifier_auc",
-    "text_lang_classifier", "text_quality_classifier", "time_weighted_avg",
-    "zorder_layout_lineitem",
-    # (2) implementation changed this round (r14 optimization round):
-    # dictionary-encoded jaccard/containment family, streamed RRF panel,
-    # ccnet LM specialization + gate overlap, BFS/crossdoc structure
-    "dedup_jaccard_prefix", "dedup_ngram_jaccard", "dedup_containment",
-    "crossdoc_ngram_overlap", "retrieval_rrf_hybrid", "pipeline_ccnet_recipe",
-    "bfs_purchase_distance", "cheapest_path_copurchase",
-    # (2) summarize_spans ownership-cache change: the spanlog gate
-    # queries most affected (task_runs/workflow_runs/deps/logged_values
-    # are additionally digest-locked at 10^6 spans in every bench run;
-    # the remaining spanlog_* names rotate in r15)
-    "spanlog_task_runs", "spanlog_workflow_runs", "spanlog_artifacts",
-    "spanlog_logged_values", "spanlog_attr_union", "spanlog_exceptions",
-    # (2) the _grams tok-precedence fix (substr family + its pipelines)
-    # and the BPE adaptive-trainer switch
-    "substr_cut_docs", "substr_cut_stats", "substr_winnow_stats",
-    "dedup_exact_substring", "pipeline_dedup_then_cut",
-    "pipeline_clean_corpus",
-    "bpe_train_merges", "bpe_encode_stats", "bpe_encode_oov",
-    "text_bpe_pretokens",
-    # (2/r13 carry-over, VERDICT r13 item 7) the r13 Arrow/expression
-    # rewrites that never landed in a driver rotation: minhash/simhash
-    # signatures, repetition counters, the HLL bit-length rho. Leftover
-    # unverified r13 rewrites (table_profile_lineitem,
-    # dedup_minhash_est_error, ccnet oracle parity helpers) rotate in r15.
-    "text_repetition", "dedup_minhash_lsh", "dedup_simhash",
-    "hll_distinct_customers", "hll_users_by_event_type",
-    "hll_cumulative_users", "hll_intersection_parts",
-]
+# One module per operator family. Later modules override earlier names
+# on a clash, so the order matters.
+_QUERY_MODULES = (
+    "tpch_full", "asof_q", "session_q", "pipeline_q", "graph_q", "stats_q",
+    "bloom_q", "multimodal_q", "streaming_q", "sketch_q", "srp_lsh_q",
+    "tpch_extra", "cluster_q", "dedup_q", "relational", "text_ops",
+    "similarity_q", "span_q", "span_ops_q", "corpus_q", "hll_q",
+    "asof_extra_q", "mix_q", "basket_q", "fuzzy_q", "bpe_q", "profile_q",
+    "mv_q", "seasonal_q", "audit_q", "drift_q", "substr_q", "dsir_q",
+    "semdedup_q", "bm25_q", "cluster_docs_q", "media_dedup_q",
+    "text_classifier_q", "doremi_q", "ccnet_q", "media_audio_q",
+    "lang_classifier_q", "text_auc_q", "mips_q", "scd_q", "hardneg_q",
+    "bitext_q", "layout_q", "lpa_q", "fs_linkage_q", "attribution_q",
+    "perplexity_q", "cdc_q", "calibration_q", "phrase_q", "group_auc_q",
+    "trigram_q", "pr_curve_q", "unimax_q", "components_q", "rrf_q",
+    "matryoshka_q", "kn_q", "media_keyframe_q", "containment_q",
+    "linkpred_q", "heaps_q", "anonymity_q", "kcore_q", "holt_q", "chi2_q",
+    "holt_winters_q", "bootstrap_q", "conformal_q",
+)
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    from . import (
-        tpch_full,
-        asof_q,
-        session_q,
-        pipeline_q,
-        graph_q,
-        stats_q,
-        bloom_q,
-        multimodal_q,
-        streaming_q,
-        sketch_q,
-        srp_lsh_q,
-        tpch_extra,
-        cluster_q,
-        dedup_q,
-        relational,
-        text_ops,
-        similarity_q,
-        span_q,
-        span_ops_q,
-        corpus_q,
-        hll_q,
-        asof_extra_q,
-        mix_q,
-        basket_q,
-        fuzzy_q,
-        bpe_q,
-        profile_q,
-        mv_q,
-        seasonal_q,
-        audit_q,
-        drift_q,
-        substr_q,
-        dsir_q,
-        semdedup_q,
-        bm25_q,
-        cluster_docs_q,
-        media_dedup_q,
-        text_classifier_q,
-        doremi_q,
-        ccnet_q,
-        media_audio_q,
-        lang_classifier_q,
-        text_auc_q,
-        mips_q,
-        scd_q,
-        hardneg_q,
-        bitext_q,
-        layout_q,
-        lpa_q,
-        fs_linkage_q,
-        attribution_q,
-        perplexity_q,
-        cdc_q,
-        calibration_q,
-        phrase_q,
-        group_auc_q,
-        trigram_q,
-        pr_curve_q,
-        unimax_q,
-        components_q,
-        rrf_q,
-        matryoshka_q,
-        kn_q,
-        media_keyframe_q,
-        containment_q,
-        linkpred_q,
-        heaps_q,
-        anonymity_q,
-        kcore_q,
-        holt_q,
-        chi2_q,
-        holt_winters_q,
-        bootstrap_q,
-        conformal_q,
-    )
-
     out: dict[str, QuerySpec] = {}
-    for mod in (
-        tpch_full,
-        asof_q,
-        session_q,
-        pipeline_q,
-        graph_q,
-        stats_q,
-        bloom_q,
-        multimodal_q,
-        streaming_q,
-        sketch_q,
-        srp_lsh_q,
-        tpch_extra,
-        cluster_q,
-        dedup_q,
-        relational,
-        text_ops,
-        similarity_q,
-        span_q,
-        span_ops_q,
-        corpus_q,
-        hll_q,
-        asof_extra_q,
-        mix_q,
-        basket_q,
-        fuzzy_q,
-        bpe_q,
-        profile_q,
-        mv_q,
-        seasonal_q,
-        audit_q,
-        drift_q,
-        substr_q,
-        dsir_q,
-        semdedup_q,
-        bm25_q,
-        cluster_docs_q,
-        media_dedup_q,
-        text_classifier_q,
-        doremi_q,
-        ccnet_q,
-        media_audio_q,
-        lang_classifier_q,
-        text_auc_q,
-        mips_q,
-        scd_q,
-        hardneg_q,
-        bitext_q,
-        layout_q,
-        lpa_q,
-        fs_linkage_q,
-        attribution_q,
-        perplexity_q,
-        cdc_q,
-        calibration_q,
-        phrase_q,
-        group_auc_q,
-        trigram_q,
-        pr_curve_q,
-        unimax_q,
-        components_q,
-        rrf_q,
-        matryoshka_q,
-        kn_q,
-        media_keyframe_q,
-        containment_q,
-        linkpred_q,
-        heaps_q,
-        anonymity_q,
-        kcore_q,
-        holt_q,
-        chi2_q,
-        holt_winters_q,
-        bootstrap_q,
-        conformal_q,
-    ):
-        out.update(mod.QUERIES)
-    missing = [n for n in _FRONT_WINDOW if n not in out]
-    assert not missing, f"front-window names not registered: {missing}"
-    ordered = {n: out[n] for n in _FRONT_WINDOW}
-    ordered.update((n, s) for n, s in out.items() if n not in ordered)
-    return ordered
+    for name in _QUERY_MODULES:
+        out.update(importlib.import_module(f"{__name__}.{name}").QUERIES)
+    return out

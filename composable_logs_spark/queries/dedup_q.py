@@ -381,8 +381,8 @@ def jaccard_col(a: str, b: str):
     distinct arrays every caller passes, same integers so the rounded
     double is bit-identical, and the per-pair array_union hashset build
     (the second of two per-row set constructions in the verify stage)
-    disappears. Measured on the bandsweep's 490k-pair verify: see
-    OPTIMIZATION_r13.md."""
+    disappears. Measured on dedup_minhash_bandsweep at sf0.1 (490k
+    candidate pairs): 6.75 -> 5.87 s min-of-3, same-session A/B."""
     inter = F.size(F.array_intersect(a, b))
     return F.round(inter / (F.size(a) + F.size(b) - inter), 4)
 

@@ -288,8 +288,8 @@ ORDER BY media_a, media_b
 # mean shift flips every pixel whose value lands in one exact 6-wide
 # boundary window, so the rare boundary doc jumps in steps of its
 # value multiplicity; both engines agree exactly either way). The
-# 64-bit queries keep their semantics this round; the streaming image
-# index migrates to this signature with the next gate-window rotation.
+# 64-bit queries keep their semantics; the streaming image index
+# (streaming/incremental_media.py) uses this signature.
 
 _WIDE_BITS = _SIDE * _SIDE  # 256
 _WIDE_WORDS = 8  # 8 x 32-bit signature words

@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else half of physical RAM capped at
+    48 GB: a heap the box cannot commit kills the JVM mid-run."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1024 * 1024)
+    return f"{min(ram_mb // 2, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "composable_logs_spark",
     cpus: int | None = None,
@@ -44,7 +53,7 @@ def get_spark(
         # sessions we build ourselves (r11 verdict hygiene item).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -40,7 +40,7 @@ def _safe_artifact_name(s: str) -> str:
     """Artifact FILE names keep their extension dots but must not carry
     separators or traversal components — names come from span-log data."""
     s = s.replace("\\", "_").replace("/", "_")
-    return "_" if s in (".", "..") else s
+    return "_" if s in ("", ".", "..") else s
 
 
 def safe_path(base: Path, *parts: str) -> Path:

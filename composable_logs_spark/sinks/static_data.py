@@ -15,6 +15,7 @@ import json
 from pathlib import Path
 
 from ..plans.summarize import SpanSummary
+from .directory import _safe_artifact_name, _safe_name, safe_path
 from .mermaid import make_mermaid_dag, make_mermaid_gantt
 from .report import Report, collect_report
 
@@ -37,12 +38,13 @@ def write_static_data(
     single = len(report.workflows) == 1
     wf_span_of = {w["run_id"]: w["span_id"] for w in report.workflows}
 
-    def art_base(run_id: str) -> Path:
-        return root if single else root / run_id.replace("/", "-").replace(".", "-")
+    def art_dir(run_id: str, kind: str, span_id: str) -> Path:
+        run_part = () if single else (_safe_name(run_id),)
+        return safe_path(root, *run_part, "artifacts", kind, span_id)
 
     entries = []
     for wf in report.workflows:
-        adir = art_base(wf["run_id"]) / "artifacts" / "workflow" / wf["span_id"]
+        adir = art_dir(wf["run_id"], "workflow", wf["span_id"])
         adir.mkdir(parents=True, exist_ok=True)
         names: list[str] = []
         if with_mermaid:
@@ -81,11 +83,11 @@ def write_static_data(
         )
 
     for t in report.tasks:
-        adir = art_base(t["run_id"]) / "artifacts" / "task" / t["span_id"]
+        adir = art_dir(t["run_id"], "task", t["span_id"])
         adir.mkdir(parents=True, exist_ok=True)
         names = []
         for a in report.task_artifacts(t):
-            name = a["name"].replace("\\", "_").replace("/", "_")
+            name = _safe_artifact_name(a["name"])
             (adir / name).write_bytes(bytes(a["content"]))
             names.append(name)
         task_meta = {

@@ -9,10 +9,11 @@ is rejected (reference :137-138). Round-trip law: decode(encode(x)) == x.
 Two layers are provided:
 - Python-side ``SerializedData`` used by the orchestrator/logger when it
   writes spans, and
-- Spark-side column expressions (``decode_columns``) used by the
-  summarisation queries to turn a triple into typed columns — pure
-  built-in functions (unbase64/CASE/try_cast), no UDF, so the decode
-  stays in whole-stage codegen at 100 TB.
+- Spark-side column expressions (``decode_columns``) that turn a logged
+  value's (type, encoded_content) pair into typed columns. Summarisation
+  applies them to each logged value inside its per-run arrays
+  (``plans/summarize.py::_finish``); they are built-in functions only,
+  no UDF.
 """
 
 from __future__ import annotations
@@ -66,13 +67,12 @@ class SerializedData:
 
 
 def decode_columns(type_col: Column, content_col: Column) -> dict[str, Column]:
-    """Spark-native decode of a (type, encoded_content) pair into a set of
-    typed columns (one non-null per row). Used to build the
-    ``logged_values`` table — see FIXTURES.md A3.
+    """Spark-native decode of a (type, encoded_content) pair into the
+    ``logged_values`` table's typed columns (at most one non-null per
+    row; a ``bytes`` value keeps only its type) — see FIXTURES.md A3.
     """
     return {
         "value_str": F.when(type_col == "utf-8", content_col),
-        "value_bytes": F.when(type_col == "bytes", F.unbase64(content_col)),
         "value_long": F.when(type_col == "int", content_col.cast("long")),
         "value_double": F.when(type_col == "float", content_col.cast("double")),
         "value_bool": F.when(type_col == "bool", content_col.cast("boolean")),

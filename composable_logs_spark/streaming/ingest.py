@@ -24,6 +24,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.spans_ops import new_spans
 from ..spanlog.schema import SPAN_SCHEMA
 from ..spanlog.sources import read_span_jsonl
 
@@ -121,11 +122,4 @@ class SpanRecorder:
         return self
 
     def __exit__(self, *exc) -> None:
-        after = read_span_jsonl(self.spark, self.log_dir)
-        before = self._before
-        self.spans = after.join(
-            before,
-            (after["context.span_id"] == before["span_id"])
-            & (after["context.trace_id"] == before["trace_id"]),
-            "left_anti",
-        )
+        self.spans = new_spans(read_span_jsonl(self.spark, self.log_dir), self._before)

@@ -2,11 +2,13 @@
 
 import json
 import time
+from datetime import datetime
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from composable_logs_spark.operators import new_spans
 from composable_logs_spark.plans import summarize_spans
 from composable_logs_spark.sinks import (
     make_mermaid_dag,
@@ -14,7 +16,7 @@ from composable_logs_spark.sinks import (
     write_spans_to_directory,
     write_static_data,
 )
-from composable_logs_spark.sinks.report import collect_report
+from composable_logs_spark.sinks.report import Report, collect_report
 from composable_logs_spark.spanlog import SpanWriter, read_span_jsonl
 from composable_logs_spark.spanlog import fixtures as FX
 from composable_logs_spark.streaming import SpanRecorder, stream_task_runs
@@ -234,6 +236,39 @@ def test_static_data_sink(spark, tmp_path):
     assert len(list(Path(tmp_path).glob("*/artifacts/workflow/*/gantt.mmd"))) == 2
 
 
+def _hostile_report() -> Report:
+    """Two runs, one with a traversing run_id, each task logging
+    artefacts whose names are path components or separators."""
+    t0, t1 = datetime(2024, 1, 1, 0, 0, 0), datetime(2024, 1, 1, 0, 0, 5)
+    report = Report([], [], {}, {}, {}, {})
+    for run_id in ("../escape", "ok"):
+        common = dict(run_id=run_id, start_time=t0, end_time=t1, duration_s=5.0,
+                      is_success=True, attributes={})
+        report.workflows.append(dict(common, span_id="w1"))
+        task = dict(common, span_id="t1", task_id="task", task_type="python",
+                    n_exceptions=0)
+        report.tasks.append(task)
+        report.tasks_by_run[run_id] = [task]
+        report.deps_by_run[run_id] = []
+        report.artifacts_by_task[(run_id, "t1")] = [
+            {"name": n, "content": n.encode()} for n in ("..", ".", "", "a/b")
+        ]
+    return report
+
+
+def test_sinks_keep_hostile_names_under_root(tmp_path):
+    report = _hostile_report()
+    roots = [tmp_path / "out" / "dir", tmp_path / "out" / "www"]
+    write_spans_to_directory(report, roots[0])
+    write_static_data(report, roots[1])
+    files = [p for p in tmp_path.rglob("*") if p.is_file()]
+    assert all(any(p.is_relative_to(r) for r in roots) for p in files), files
+    for root in roots:
+        names = sorted(p.name for p in root.rglob("*") if p.is_file())
+        # per run: ".", ".." and "" all become "_", "a/b" becomes "a_b"
+        assert names.count("_") == 2 and names.count("a_b") == 2, names
+
+
 def test_span_recorder(spark, tmp_path):
     w = SpanWriter(tmp_path)
     w.write_many(FX.compose3(0))
@@ -244,6 +279,21 @@ def test_span_recorder(spark, tmp_path):
                  rec.spans.select(F.col("context.trace_id").alias("run_id")).collect()}
     assert new_names == {f"0x{1:032x}"}
     assert rec.spans.count() == len(FX.parallel_fail(1))
+
+
+def test_new_spans_keys_on_trace_and_span_id(spark):
+    old, new = FX.compose3(0), FX.compose3(1)
+    # the two runs reuse the same span ids; only the trace id differs
+    assert {s["context"]["span_id"] for s in old} == {s["context"]["span_id"] for s in new}
+    seen = spans_df(spark, old).select(
+        F.col("context.trace_id").alias("trace_id"),
+        F.col("context.span_id").alias("span_id"),
+    )
+    got = new_spans(spans_df(spark, old + new), seen)
+    rows = got.select("context.trace_id", "context.span_id").collect()
+    assert sorted(tuple(r) for r in rows) == sorted(
+        (s["context"]["trace_id"], s["context"]["span_id"]) for s in new
+    )
 
 
 def test_stream_matches_batch(spark, tmp_path):

@@ -1,9 +1,11 @@
-"""The 10^6-span generator (spanlog/biggen) at test-sized parameters:
-the SAME summarisation invariants the golden fixtures prove, on a
-generated multi-run log with deep/wide/diamond/mixed DAG shapes, via
-the JSONL -> parquet-archive path the bench times.
+"""The 10^6-span generator (spanlog/biggen): the SAME summarisation
+invariants the golden fixtures prove, on a generated multi-run log with
+deep/wide/diamond/mixed DAG shapes, via the JSONL -> parquet-archive
+path; and pinned summary digests up to 940,992 spans. The ~3.8M-span
+digests are checked by tools/check_span_digests.py.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from composable_logs_spark.plans import summarize_spans
@@ -12,6 +14,7 @@ from composable_logs_spark.spanlog.archive import (
     read_span_archive,
 )
 from composable_logs_spark.spanlog.biggen import generate_big_spanlog
+from composable_logs_spark.spanlog.digest import summaries_digest
 from composable_logs_spark.spanlog.sources import read_span_jsonl
 
 _RUNS, _TASKS = 8, 120
@@ -84,11 +87,39 @@ def test_big_fixture_invariants(spark, tmp_path):
     # session-shape-insensitive: see spanlog/digest.py) over all four
     # outputs — any closure or aggregation regression at 10^3-task
     # scale flips at least one of these.
-    from composable_logs_spark.spanlog.digest import summaries_digest
-
     assert summaries_digest(s) == {
         "task_runs": (960, 531825139526520, 531878920131972),
         "workflow_runs": (8, 4183629561367, 4184192716567),
         "deps": (1162, 638295125182874, 638361574161218),
         "logged_values": (96, 49670163058122, 49676072725782),
     }
+
+
+# Pinned summary digests of the generated log at 3,200 and 204,800 tasks
+# (the second is 940,992 spans). They were pinned through the parquet
+# archive; reading the JSONL directly gives the same digests.
+_BIG_GOLDEN = {
+    (32, 100): {
+        "task_runs": (3200, 1772011136668887, 1772192363614803),
+        "workflow_runs": (32, 16124174784924, 16125803295432),
+        "deps": (3848, 2129654982555042, 2129875436790186),
+        "logged_values": (320, 178437722863588, 178456483666708),
+    },
+    (256, 800): {
+        "task_runs": (204800, 112360635184656918, 112364542080687119),
+        "workflow_runs": (256, 140349831811029, 140365571198589),
+        "deps": (254784, 140134401279133058, 140129032624503752),
+        "logged_values": (20480, 11221897439570005, 11220860827261727),
+    },
+}
+
+
+@pytest.mark.parametrize("runs,tasks", sorted(_BIG_GOLDEN))
+def test_big_fixture_digest_pinned(spark, tmp_path, runs, tasks):
+    log_dir = str(tmp_path / "biglog")
+    generate_big_spanlog(log_dir, n_runs=runs, tasks_per_run=tasks)
+    s = summarize_spans(read_span_jsonl(spark, log_dir))
+    try:
+        assert summaries_digest(s) == _BIG_GOLDEN[(runs, tasks)]
+    finally:
+        s.release()

@@ -5,9 +5,10 @@ growth — measured evidence for the would-this-survive-a-scale-up
 question, beyond the largest driver-provided SF.
 
 Each timing is the min of three noop-forced Spark-cache-cold passes
-after a JIT warm-up pass (bench.py's protocol, plus one pass so the min
-is never the OS-page-cache-cold disk read of the single-file replica). spanlog_task_runs is excluded
-(its input is the span fixture set, independent of the SF directory).
+after a JIT warm-up pass (three, not two, so the min is never the
+OS-page-cache-cold disk read of the single-file replica).
+spanlog_task_runs is excluded (its input is the span fixture set,
+independent of the SF directory).
 
 Usage: python tools/bench_scaling.py [scaled_dir]
 Prints one JSON line {"dirs", "queries": {name: {dir: sec}}, "ratios"}.

@@ -2,7 +2,7 @@
 the noop sink: per query, `build` = queries()[name](spark, sf) wall,
 `exec` = noop-write wall. min-of-N (default 2) after one untimed warm
 pass per query. Serialized, one session — a profiling tool, not the
-bench (bench.py is the driver contract).
+benchmark (that is perfbench/).
 
 Usage: python tools/sweep_time.py [--n 2] [name ...]
 """
