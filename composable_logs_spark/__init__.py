@@ -16,7 +16,10 @@ This package re-expresses that capability Spark-first:
 - ``sinks``        : directory-tree, mermaid, static-site dataset sinks
 - ``orchestrator`` : @task / run_dag DAG execution with Spark as the
                      execution backend (Try monad, timeouts, short-circuit)
-- ``streaming``    : incremental span ingest via Structured Streaming
+- ``streaming``    : ``stream_task_runs`` (the task_runs summary over a
+                     growing span-log directory via Structured Streaming)
+                     and the ``SpanRecorder`` snapshot-diff, plus stateful,
+                     interval-join, MV merge-sink and progress helpers
 """
 
 __version__ = "0.1.0"

@@ -81,8 +81,8 @@ def bm25_scores(
     """Exact-integer BM25 per-document scores for any (query_id, term[,
     extra group cols]) query-terms frame over a (doc_id, term, tf, dl)
     postings frame — the scoring core shared by the batch registry
-    query, the streaming incremental index, AND the RRF hybrid fusion
-    (rrf_q), so the three cannot drift. Returns one row per
+    query and the RRF hybrid fusion (rrf_q), so the two cannot drift.
+    Returns one row per
     (*group_cols, doc_id) with ``n_terms_matched`` and ``score_micro``."""
     group_cols = ["query_id"] if group_cols is None else group_cols
     totals = tf.groupBy("doc_id").agg(F.max("dl").alias("dl")).agg(
@@ -150,8 +150,7 @@ def bm25_topk(
     k: int = _TOP_K,
 ) -> DataFrame:
     """Rank any (doc_id, term, tf, dl) postings frame against the query
-    workload — shared verbatim by the batch registry query and the
-    streaming incremental index, so the two cannot drift."""
+    workload."""
     queries = _BM25_QUERIES if queries is None else queries
     qterms = spark.createDataFrame(
         [(qid, q, t) for qid, q in queries for t in sorted(set(q.split()))],

@@ -21,10 +21,7 @@ untouched keys.
 
 100 TB design: one window partitioned by key over the changelog (the
 shuffle), one shuffle join on the same key (exchange reuse), zero
-windows over the base table. Per-micro-batch this is exactly the
-foreachBatch merge the streaming MV sink (streaming/mv_sink.py)
-already implements for aggregates — here it is the row-level flavor.
-The output summarises the snapshot with exact integer balances so the
+windows over the base table. The output summarises the snapshot with exact integer balances so the
 hash proves every surviving row and every tombstone.
 """
 

@@ -146,18 +146,21 @@ def _encoded_shingle_postings(docs: DataFrame):
       re-encoded as ids, for the exact verify stage.
 
     r14 (guide §2.3/§4.1, r13 verdict item 1): ids come from
-    ``monotonically_increasing_id`` over the DISTINCT-shingle table —
-    an injective relabeling (collision-free by construction, unlike
-    md5-hashing the strings), pinned by an eager localCheckpoint so
-    every consumer sees one assignment. Every downstream statistic the
-    jaccard/containment family computes (equi-join candidate sets,
+    ``monotonically_increasing_id`` over the DISTINCT-shingle table,
+    sorted on ``shingle`` within each post-aggregate partition — an
+    injective relabeling (unlike md5-hashing the strings) that is a
+    function of the shingle set and the shuffle partitioning, not of the
+    order rows reach the aggregate, so a recomputed partition gets the
+    same ids. An eager localCheckpoint pins the encoded postings so
+    every consumer reads one materialization. Every downstream statistic
+    the jaccard/containment family computes (equi-join candidate sets,
     shared-shingle counts, |A ∩ B|, |A|, |B|) is invariant under an
     injective relabeling, so results are bit-identical while the
-    candidate self-joins shuffle 8-byte longs instead of ~25-char
-    3-gram strings and the per-pair verify builds long hashsets instead
-    of string hashsets. The df agg is the same agg the DF-cut /
-    prefix-rank already needed — the encode join replaces the old
-    df-attach join, it does not add one."""
+    candidate self-joins shuffle 8-byte longs instead of ~25-char 3-gram
+    strings and the per-pair verify builds long hashsets instead of
+    string hashsets. The df agg is the same agg the DF-cut / prefix-rank
+    already needed — the encode join replaces the old df-attach join, it
+    does not add one."""
     docs = docs.cache()  # one shingle pass feeds both encode-join sides
     inv = docs.select(
         "doc_id", F.size("shingles").alias("n"), F.explode("shingles").alias("shingle")
@@ -165,6 +168,7 @@ def _encoded_shingle_postings(docs: DataFrame):
     dict_tab = (
         inv.groupBy("shingle")
         .agg(F.count("*").alias("df"))
+        .sortWithinPartitions("shingle")
         .withColumn("sid", F.monotonically_increasing_id())
     )
     # the ONE materialization: dict_tab has a single consumer (this
@@ -225,10 +229,8 @@ def minhash_mh(docs: DataFrame) -> DataFrame:
     shingle slots with '' exactly like the zip_with/coalesce
     construction, and both distincts keep first-occurrence order.
 
-    Reused by ``minhash_signatures`` (production banding), the
-    band-parameter sweep below, and — via the signatures —
-    ``streaming.incremental_dedup`` (same signatures on both the
-    static index and each streamed micro-batch, so verdicts agree).
+    Reused by ``minhash_signatures`` (production banding) and the
+    band-parameter sweep below.
     """
 
     def gen(batches):

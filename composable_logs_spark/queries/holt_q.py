@@ -51,10 +51,7 @@ _H = 7  # forecast horizon, days
 
 def holt_fold_expr(arr: str, init_lvl: str, init_trd: str) -> str:
     """The Holt recurrence as a JVM-side ``aggregate`` fold over an
-    array of ``(day, y)`` structs (y in integer cents). ONE shared
-    implementation — the batch query and the streaming incremental sink
-    (``streaming/incremental_holt.py``) both call this, so stream and
-    batch cannot drift."""
+    array of ``(day, y)`` structs (y in integer cents)."""
     lvl_t = (
         f"{_ALPHA} * (CAST(x.y AS DOUBLE) / 100.0)"
         f" + (1.0 - {_ALPHA}) * (acc.lvl + acc.trd)"

@@ -213,8 +213,7 @@ def wav_variant_corpus_from_documents(docs: DataFrame) -> DataFrame:
 
 def audio_signatures(media: DataFrame) -> DataFrame:
     """(media_id, payload[WAV]) -> (media_id, fp1, fp2): the 16-byte
-    two-word signature the near-dup paths (batch + streaming index)
-    keep per track. One decode per track; fp1 is bit-identical to the
+    two-word signature the near-dup path keeps per track. One decode per track; fp1 is bit-identical to the
     gate query's fingerprint."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -244,9 +243,8 @@ def audio_signatures(media: DataFrame) -> DataFrame:
 
 
 def audio_band_buckets(sig: DataFrame) -> DataFrame:
-    """One row per 15-bit band key over the packed 61-bit signature —
-    shared by the batch self-join and the streaming new-vs-index join
-    (streaming/incremental_audio.py)."""
+    """One row per 15-bit band key over the packed 61-bit signature,
+    the bucket side of the batch self-join."""
     comb = F.col("fp1") + F.col("fp2") * F.lit(1 << _FP2_SHIFT)
     return sig.select(
         "media_id",

@@ -141,8 +141,7 @@ def ahash_signatures(media: DataFrame) -> DataFrame:
 
 def ahash_band_buckets(sig: DataFrame) -> DataFrame:
     """(media_id, sim_lo, sim_hi) -> one row per 8-bit band key: the
-    SimHash-style bucket explode, shared by the batch self-join and the
-    streaming new-vs-index join (streaming/incremental_media.py)."""
+    SimHash-style bucket explode of the batch self-join."""
     return sig.select(
         "media_id",
         "sim_lo",
@@ -288,8 +287,7 @@ ORDER BY media_a, media_b
 # mean shift flips every pixel whose value lands in one exact 6-wide
 # boundary window, so the rare boundary doc jumps in steps of its
 # value multiplicity; both engines agree exactly either way). The
-# 64-bit queries keep their semantics; the streaming image index
-# (streaming/incremental_media.py) uses this signature.
+# 64-bit queries keep their semantics.
 
 _WIDE_BITS = _SIDE * _SIDE  # 256
 _WIDE_WORDS = 8  # 8 x 32-bit signature words

@@ -113,9 +113,9 @@ def scene_fingerprints(media: DataFrame) -> DataFrame:
     """(media_id, n_frames, n_cuts, max_cut_delta, cut_md5,
     profile_md5, fsum) scene-cut fingerprints for any
     (media_id, payload) frame — the shared core of
-    the per-video report query (``media_scene_cut``), the temporal
-    near-dup pair query (``media_video_neardup``) and the streaming
-    index (streaming/incremental_scene), so the three cannot drift.
+    the per-video report query (``media_scene_cut``) and the temporal
+    near-dup pair query (``media_video_neardup``), so the two cannot
+    drift.
 
     Per 64-byte frame, an integer brightness proxy (byte sum); a cut
     wherever consecutive frames differ by more than ``_CUT_T``. The

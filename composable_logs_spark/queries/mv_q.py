@@ -5,9 +5,7 @@ delta segment), while the oracle computes the same view with one flat
 aggregation over all rows — the gate's hash equality IS the proof that
 the merge algebra is lossless.
 
-This is the batch half of the engine's incremental story (the streaming
-half lives in ``streaming/`` with stream==batch equivalence tests): a
-100 TB deployment never re-aggregates history, it folds deltas into
+A 100 TB deployment never re-aggregates history, it folds deltas into
 partial-agg state. The partial state here is (count, exact integer
 micro-unit sum) per key — both mergeable by `+` — and every derived
 column (avg, money-rounded sum) is computed only AFTER the merge, from

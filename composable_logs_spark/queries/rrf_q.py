@@ -38,6 +38,8 @@ reference has no retrieval surface.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -60,9 +62,7 @@ def _ranked_topk(
 ) -> DataFrame:
     """Salted two-phase per-query top-k (similarity_q pattern): local
     top-k inside hash-salt buckets, global merge over buckets*k rows.
-    ``keep`` carries extra columns (e.g. the raw score) through — used
-    by the incremental index, whose per-batch candidate lists must be
-    re-rankable at merge time."""
+    ``keep`` carries extra columns (e.g. the raw score) through."""
     order = [order_col.desc(), F.col("doc_id")]
     salted = scored.withColumn(
         "_salt", F.pmod(F.hash(F.col("doc_id")), F.lit(_SALT_BUCKETS))
@@ -129,8 +129,7 @@ def _dense_scores_arrow(
 ) -> DataFrame:
     """The batch query's dense side as one ``mapInArrow`` pass — the
     ann_cosine_top5 pattern (guide §4.2/§4.5): the expression form
-    (``dense_scores``, kept verbatim — the streaming index scores
-    arbitrary micro-batch frames with it) evaluates an interpreted
+    (``dense_scores``) evaluates an interpreted
     zip_with + two aggregate lambdas per (corpus row x query), 64 dims
     of non-codegen work each. Here numpy accumulates the dot product
     and squared norms dimension-at-a-time in float64 — the SAME
@@ -147,11 +146,23 @@ def _dense_scores_arrow(
     float64 — the old form materialized the ENTIRE corpus embedding
     matrix per task before slicing, O(corpus) memory that contradicts
     the module's 100 TB notes. Same float64 values in the same sorted
-    order, so scores stay bit-identical."""
+    order, so scores stay bit-identical.
+
+    Only top-level ``*.parquet`` files of a directory are read, so a
+    nested or partitioned embeddings directory raises ``ValueError``
+    rather than silently dropping query vectors."""
+    if os.path.isdir(emb_path):
+        nested = sorted(
+            e.name for e in os.scandir(emb_path)
+            if e.is_dir() and not e.name.startswith(("_", "."))
+        )
+        if nested:
+            raise ValueError(
+                f"embeddings directory {emb_path} has subdirectory "
+                f"{nested[0]!r}; only its top-level *.parquet files are read"
+            )
 
     def score(batches):
-        import os
-
         import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -271,14 +282,9 @@ def rrf_rank(
     qterms: DataFrame,
     dense_scored: DataFrame,
 ) -> DataFrame:
-    """Fuse a BM25 postings frame with a pre-scored dense frame — the
-    core shared by the batch registry query and the streaming
-    incremental index (streaming/incremental_rrf), so the two cannot
-    drift. ``dense_scored`` is any (query_id, doc_id, cosine_r) frame
-    whose per-query top-_CAND_K equals the full corpus's (the
-    incremental index passes a union of per-batch candidate lists —
-    cosine is corpus-stat-independent, so per-batch top-k merge is
-    exact)."""
+    """Fuse a BM25 postings frame with a pre-scored dense frame.
+    ``dense_scored`` is any (query_id, doc_id, cosine_r) frame whose
+    per-query top-_CAND_K equals the full corpus's."""
     # NO broadcast hint: qterms is corpus-DERIVED (every _QUERY_STRIDEth
     # doc x its distinct terms — ~1% of the token stream, unbounded in
     # corpus size), so forcing it driver-side risks OOM at scale; AQE's

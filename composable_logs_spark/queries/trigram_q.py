@@ -77,10 +77,8 @@ def trigram_model(train: DataFrame) -> dict[str, DataFrame]:
     """The stupid-backoff count tables from a (doc_id, text) frame (or
     a pre-tokenized (doc_id, arr) frame — see ``_with_arr``):
     tri_s (w1 w2 w3, c3, cb12), bi_s (w2 w3, cb23, c2), uni (w, c1) and
-    the 1-row nv (n_toks, v). Returned as plain frames so callers can
-    persist them — the streaming scorer (streaming/incremental_trigram)
-    trains once, writes these four tables, and scores every arriving
-    batch against them."""
+    the 1-row nv (n_toks, v). Returned as plain frames so a caller can
+    persist them and score later batches against them."""
     tri = _ngrams(train, 3, "w1", "w2", "w3")
     bi = _ngrams(train, 2, "a", "b")
     # drop zero-length tokens: split of an empty/whitespace-only doc

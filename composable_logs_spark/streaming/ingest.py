@@ -101,6 +101,11 @@ class SpanRecorder:
 
     with SpanRecorder(spark, log_dir) as rec: ...
     rec.spans  ->  DataFrame of spans that appeared inside the block
+
+    Both the enter-time ``(trace_id, span_id)`` set and the block's spans
+    are collected to the driver, like the reference's in-memory recorder:
+    nothing stays cached after ``__exit__``, and spans appended to the
+    log after the block never show up in ``rec.spans``.
     """
 
     def __init__(self, spark: SparkSession, log_dir: str | Path):
@@ -110,16 +115,13 @@ class SpanRecorder:
 
     def __enter__(self) -> "SpanRecorder":
         Path(self.log_dir).mkdir(parents=True, exist_ok=True)
-        self._before = (
-            read_span_jsonl(self.spark, self.log_dir)
-            .select(
-                F.col("context.trace_id").alias("trace_id"),
-                F.col("context.span_id").alias("span_id"),
-            )
-            .cache()
+        ids = read_span_jsonl(self.spark, self.log_dir).select(
+            "context.trace_id", "context.span_id"
         )
-        self._before.count()  # materialise the snapshot NOW
+        self._before = [tuple(r) for r in ids.collect()]
         return self
 
     def __exit__(self, *exc) -> None:
-        self.spans = new_spans(read_span_jsonl(self.spark, self.log_dir), self._before)
+        seen = self.spark.createDataFrame(self._before, "trace_id string, span_id string")
+        rows = new_spans(read_span_jsonl(self.spark, self.log_dir), seen).collect()
+        self.spans = self.spark.createDataFrame(rows, SPAN_SCHEMA)

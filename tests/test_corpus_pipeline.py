@@ -1,186 +1,5 @@
-"""End-to-end streaming clean-corpus maintenance: quality filtering +
-incremental dedup against a growing index, across micro-batches."""
-
-import json
-
-from composable_logs_spark.streaming.corpus_pipeline import stream_clean_corpus
-from composable_logs_spark.streaming.incremental_dedup import build_signature_index
-
-GOOD_1 = ("the quick brown fox jumps over a lazy dog while the sun sets "
-          "and a river flows down to the quiet valley tonight")
-GOOD_2 = ("a gentle wind moves through the tall trees and the old mill "
-          "turns slowly beside a stream in the warm evening light")
-BASE_A = ("the silver ship sails across a wide ocean toward the distant "
-          "harbor where a beacon burns through the cold night fog")
-
-
-def _near_copy(text):
-    return " ".join(text.split()[:-2])
-
-
-def test_stream_clean_corpus(spark, tmp_path):
-    docs_dir = tmp_path / "incoming"
-    out = tmp_path / "clean_corpus"
-    growth = tmp_path / "index_growth"
-    ckpt = tmp_path / "ckpt"
-    docs_dir.mkdir()
-    growth.mkdir()
-
-    base = spark.createDataFrame(
-        [(1, BASE_A), (2, "another unrelated base corpus document entirely")],
-        "doc_id long, text string",
-    )
-    index_sig = build_signature_index(base).cache()
-    index_sig.count()
-
-    def write_batch(name, rows):
-        with open(docs_dir / name, "w") as f:
-            for did, text in rows:
-                f.write(json.dumps(
-                    {"doc_id": did, "text": text, "lang": "en", "source": "crawl"}
-                ) + "\n")
-
-    write_batch("b1.jsonl", [
-        (10, GOOD_1),                              # kept
-        (11, "lorem ipsum " + GOOD_1),             # boilerplate -> dropped
-        (12, _near_copy(BASE_A)),                  # near-dup of index -> dropped
-    ])
-
-    q = stream_clean_corpus(
-        spark, str(docs_dir), index_sig, str(out), str(growth), str(ckpt)
-    )
-    try:
-        q.processAllAvailable()
-        write_batch("b2.jsonl", [
-            (20, _near_copy(GOOD_1)),              # near-dup of batch-1 arrival
-            (21, GOOD_2),                          # kept
-        ])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    corpus = spark.read.parquet(str(out))
-    assert {r["doc_id"] for r in corpus.collect()} == {10, 21}
-    assert set(corpus.columns) == {"doc_id", "text", "lang", "source"}
-    # the index grew by exactly the kept docs' signatures
-    grown = spark.read.parquet(str(growth))
-    assert {r["doc_id"] for r in grown.collect()} == {10, 21}
-
-
-def test_stream_matches_batch_over_clean_dedup_pack_chain(spark, tmp_path, sf_dir):
-    """Full-chain equivalence: the SAME raw documents run through (a) the
-    batch composition — quality mask, minhash near-dup keep-lowest-id,
-    shard-prefixed packing — and (b) the streaming maintenance loop fed
-    one document per micro-batch in doc_id order against an empty index,
-    then packed with the same formula. Kept doc sets, grown index, and
-    the resulting bin tables must agree exactly. (Arrival in id order
-    matches batch keep-lowest-id canonicalisation; the planted near-dup
-    structure is pairwise, where greedy first-arrival and cluster-
-    canonical dedup provably coincide.)"""
-    import pyspark.sql.functions as F
-
-    from composable_logs_spark.queries import load
-    from composable_logs_spark.queries.corpus_q import _PACK_BUDGET
-    from composable_logs_spark.queries.dedup_q import (
-        _JACCARD_THRESHOLD,
-        bands_long,
-        jaccard_col,
-        minhash_signatures,
-    )
-    from composable_logs_spark.streaming.corpus_pipeline import quality_mask
-
-    base = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 12)
-        .select("doc_id", "text", "lang", "source")
-    )
-    variants = base.where(F.col("doc_id") < 4).select(
-        (F.col("doc_id") + 1000).alias("doc_id"),
-        # near-copy: drop the last two words
-        F.array_join(
-            F.slice(F.split("text", r"\s+"), 1, F.size(F.split("text", r"\s+")) - 2),
-            " ",
-        ).alias("text"),
-        "lang",
-        "source",
-    )
-    docs = base.unionByName(variants).cache()
-    rows = sorted(docs.collect(), key=lambda r: r["doc_id"])
-
-    # -- batch composition ------------------------------------------------
-    passed = docs.join(quality_mask(docs), "doc_id").where("keep").drop("keep")
-    sig = minhash_signatures(passed).cache()
-    dup_higher = (
-        bands_long(sig).alias("a")
-        .join(bands_long(sig).alias("b"), ["band_idx", "band_hash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("lo"), F.col("b.doc_id").alias("hi"))
-        .distinct()
-        .join(sig.select(F.col("doc_id").alias("lo"), F.col("hashes").alias("sl")), "lo")
-        .join(sig.select(F.col("doc_id").alias("hi"), F.col("hashes").alias("sh")), "hi")
-        .where(jaccard_col("sl", "sh") >= _JACCARD_THRESHOLD)
-        .select(F.col("hi").alias("doc_id"))
-        .distinct()
-    )
-    batch_kept = {
-        r["doc_id"]
-        for r in passed.join(dup_higher, "doc_id", "left_anti").collect()
-    }
-
-    # -- streaming loop, one doc per micro-batch in id order --------------
-    docs_dir = tmp_path / "incoming"
-    out = tmp_path / "clean"
-    growth = tmp_path / "growth"
-    docs_dir.mkdir(); growth.mkdir()
-    empty_index = build_signature_index(
-        spark.createDataFrame([], "doc_id long, text string")
-    )
-    q = stream_clean_corpus(
-        spark, str(docs_dir), empty_index, str(out), str(growth),
-        str(tmp_path / "ckpt"),
-    )
-    try:
-        for r in rows:
-            with open(docs_dir / f"d{r['doc_id']}.jsonl", "w") as f:
-                f.write(json.dumps(
-                    {"doc_id": r["doc_id"], "text": r["text"],
-                     "lang": r["lang"], "source": r["source"]}
-                ) + "\n")
-            q.processAllAvailable()
-    finally:
-        q.stop()
-
-    stream_kept = {r["doc_id"] for r in spark.read.parquet(str(out)).collect()}
-    assert stream_kept == batch_kept
-    grown = {r["doc_id"] for r in spark.read.parquet(str(growth)).collect()}
-    assert grown == batch_kept  # index grew by exactly the kept docs
-
-    # -- pack both kept sets with the shard-prefix formula -----------------
-    def pack(ids):
-        kept = docs.where(F.col("doc_id").isin(list(ids))).select(
-            "doc_id",
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
-            (F.col("doc_id") % 16).alias("shard"),
-        )
-        from pyspark.sql import Window as W
-
-        w = (
-            W.partitionBy("shard")
-            .orderBy(F.col("n_tokens").desc(), "doc_id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        return sorted(
-            kept.withColumn(
-                "bin_id",
-                F.col("shard") * 1_000_000
-                + ((F.sum("n_tokens").over(w) - F.col("n_tokens")) / _PACK_BUDGET).cast("long"),
-            )
-            .groupBy("bin_id")
-            .agg(F.count("*").alias("n"), F.sum("n_tokens").alias("t"))
-            .collect()
-        )
-
-    assert pack(batch_kept) == pack(stream_kept)
+"""Corpus-wide line dedup: ``corpus_q.corpus_line_dedup`` strips the
+boilerplate lines planted around variant documents."""
 
 
 def test_corpus_line_dedup_strips_planted_boilerplate(spark, sf_dir):

@@ -5,6 +5,7 @@ brute force over the same planted near-dup corpus."""
 
 from composable_logs_spark.queries.dedup_q import (
     _PREFIX_TAU,
+    _encoded_shingle_postings,
     _near_dup_corpus,
     _shingles,
     dedup_jaccard_prefix,
@@ -40,3 +41,19 @@ def test_prefix_join_complete_vs_bruteforce(spark, sf_dir):
     # planted variants guarantee the result is non-trivial
     assert expect
     assert got == expect
+
+
+def test_shingle_ids_do_not_depend_on_row_order(spark, sf_dir):
+    """sid is a function of the shingle set: the same docs fed in
+    reverse order over a different input partitioning get the same
+    (doc_id, sid) rows, so a recomputed stage cannot reassign ids."""
+    rows = _near_dup_corpus(spark, sf_dir).select(
+        "doc_id", _shingles(F.col("text")).alias("shingles")
+    ).collect()
+
+    def encoded(rs, n_parts):
+        docs = spark.createDataFrame(rs, "doc_id long, shingles array<string>")
+        inv_enc, _ = _encoded_shingle_postings(docs.repartition(n_parts))
+        return sorted(map(tuple, inv_enc.select("doc_id", "sid").collect()))
+
+    assert encoded(rows, 1) == encoded(rows[::-1], 5)

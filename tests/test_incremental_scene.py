@@ -1,19 +1,5 @@
-"""Streaming video near-dup (temporal fingerprints): stream-vs-batch
-equivalence against the scene-profile index, intra-batch pairing,
-growth-index stream-internal matching, and restart/replay idempotence."""
-
-from pyspark.sql import functions as F
-
-from composable_logs_spark.queries import load
-from composable_logs_spark.queries.multimodal_q import (
-    _VIDEO_VARIANT_OFFSET,
-    media_video_neardup,
-    video_corpus_from_documents,
-)
-from composable_logs_spark.streaming.incremental_scene import (
-    build_scene_index,
-    stream_scene_against_index,
-)
+"""Temporal video fingerprints read raw payload bytes:
+``multimodal_q.scene_fingerprints`` on frames above 0x7f."""
 
 
 def _vid(byte_rows):
@@ -21,18 +7,12 @@ def _vid(byte_rows):
     return bytearray(b"".join(bytes([v]) * 64 for v in byte_rows))
 
 
-def _write(spark, media_dir, rows):
-    spark.createDataFrame(rows, "media_id long, payload binary").coalesce(
-        1
-    ).write.mode("append").parquet(str(media_dir))
-
-
 def test_frame_sums_are_byte_true_above_0x7f(spark):
     """Frame sums must read RAW bytes: a UTF-8-decoding implementation
     collapses every byte >= 0x80 to U+FFFD (65533), so distinct
     non-ASCII frames (all-0xC8 vs all-0xDC) would hash identical and
     verify as duplicates at delta 0 — false positives for any binary
-    (non-text) payload, the declared input type of the streaming API."""
+    (non-text) payload, the declared input type of scene_fingerprints."""
     from composable_logs_spark.queries.multimodal_q import scene_fingerprints
 
     fp = scene_fingerprints(
@@ -46,146 +26,3 @@ def test_frame_sums_are_byte_true_above_0x7f(spark):
     assert sums[2] == [0xDC * 64] * 2
     profiles = {r["media_id"]: r["profile_md5"] for r in fp}
     assert profiles[1] != profiles[2]
-
-
-def test_stream_matches_batch_pairs(spark, sf_dir, tmp_path):
-    media_dir = tmp_path / "incoming"
-    ckpt = tmp_path / "ckpt"
-
-    media = video_corpus_from_documents(
-        load(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    base = media.where(F.col("media_id") < _VIDEO_VARIANT_OFFSET)
-    index_fp = build_scene_index(base).cache()
-    index_fp.count()
-    # ONE file => one micro-batch: every batch-query pair whose newer
-    # side is a variant — orig x variant via the index join, variant x
-    # variant (two variants sharing a profile) via the intra self-join
-    media.where(F.col("media_id") >= _VIDEO_VARIANT_OFFSET).coalesce(1).write.parquet(
-        str(media_dir)
-    )
-
-    got = []
-    q = stream_scene_against_index(
-        spark,
-        str(media_dir),
-        index_fp,
-        lambda df, bid: got.extend(df.collect()),
-        str(ckpt),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    streamed = {(r["media_id"], r["dup_of"], r["max_frame_delta"]) for r in got}
-    expected = {
-        (r["media_b"], r["media_a"], r["max_frame_delta"])
-        for r in media_video_neardup(spark, sf_dir).collect()
-        if r["media_b"] >= _VIDEO_VARIANT_OFFSET
-    }
-    assert streamed == expected
-    assert len(streamed) > 0
-
-
-def test_intra_batch_pairs_are_caught(spark, tmp_path):
-    """Two re-encodes arriving in the SAME micro-batch are paired by the
-    intra self-join — neither matches the index."""
-    media_dir = tmp_path / "incoming"
-    ckpt = tmp_path / "ckpt"
-    media_dir.mkdir()
-
-    index_fp = build_scene_index(
-        spark.createDataFrame(
-            [(1, _vid([10, 10, 200, 200]))], "media_id long, payload binary"
-        )
-    ).cache()
-    index_fp.count()
-    # same frame profile, 2 byte-mass units apart; unrelated to index
-    _write(
-        spark,
-        media_dir,
-        [(100, _vid([50, 50, 220, 220])), (200, _vid([50, 50, 220, 220]))],
-    )
-
-    got = []
-    q = stream_scene_against_index(
-        spark,
-        str(media_dir),
-        index_fp,
-        lambda df, bid: got.extend(df.collect()),
-        str(ckpt),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert {(r["media_id"], r["dup_of"], r["max_frame_delta"]) for r in got} == {
-        (200, 100, 0)
-    }
-
-
-def test_growing_index_and_replay_idempotence(spark, tmp_path):
-    """Batch 2's video matches a re-encode that arrived in batch 1 (the
-    grown index); a restart from the same checkpoint replays nothing;
-    new arrivals after the restart still match pre-restart growth."""
-    media_dir = tmp_path / "incoming"
-    growth = tmp_path / "grown_index"
-    ckpt = tmp_path / "ckpt"
-    media_dir.mkdir()
-
-    index_fp = build_scene_index(
-        spark.createDataFrame(
-            [(1, _vid([10, 10, 200, 200]))], "media_id long, payload binary"
-        )
-    ).cache()
-    index_fp.count()
-
-    a = _vid([50, 50, 220, 220])
-    # re-encode: ONE byte of frame 0 nudged +2 — frame mass 3200 -> 3202,
-    # same div-64 quantum (50), within the exact verify tolerance (<= 3)
-    a_var = bytearray(a)
-    a_var[5] = 52
-
-    got = []
-    q = stream_scene_against_index(
-        spark,
-        str(media_dir),
-        index_fp,
-        lambda df, bid: got.extend(df.collect()),
-        str(ckpt),
-        index_growth_dir=str(growth),
-    )
-    try:
-        _write(spark, media_dir, [(100, a)])
-        q.processAllAvailable()
-        assert got == []  # batch 1: nothing matches the base index
-        _write(spark, media_dir, [(200, a_var)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert {(r["media_id"], r["dup_of"], r["max_frame_delta"]) for r in got} == {
-        (200, 100, 2)
-    }
-
-    got2 = []
-    q2 = stream_scene_against_index(
-        spark,
-        str(media_dir),
-        index_fp,
-        lambda df, bid: got2.extend(df.collect()),
-        str(ckpt),
-        index_growth_dir=str(growth),
-    )
-    try:
-        q2.processAllAvailable()
-        assert got2 == []  # restart: no file reprocessed, no pair re-emitted
-        _write(spark, media_dir, [(300, a)])
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    # 300 matches both pre-restart arrivals via the grown index
-    assert {(r["media_id"], r["dup_of"], r["max_frame_delta"]) for r in got2} == {
-        (300, 100, 0),
-        (300, 200, 2),
-    }

@@ -275,10 +275,26 @@ def test_span_recorder(spark, tmp_path):
     with SpanRecorder(spark, tmp_path) as rec:
         w2 = SpanWriter(tmp_path)
         w2.write_many(FX.parallel_fail(1))
+    # spans appended after the block, to the block's own file and to a
+    # new one, are not the block's spans
+    w2.write_many(FX.compose3(2))
+    SpanWriter(tmp_path).write_many(FX.compose3(3))
     new_names = {r["run_id"] for r in
                  rec.spans.select(F.col("context.trace_id").alias("run_id")).collect()}
     assert new_names == {f"0x{1:032x}"}
     assert rec.spans.count() == len(FX.parallel_fail(1))
+
+
+def test_span_recorder_keeps_persistent_rdds_flat(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    counts = []
+    for i in range(3):
+        with SpanRecorder(spark, tmp_path) as rec:
+            SpanWriter(tmp_path).write_many(FX.compose3(20 + i))
+        assert rec.spans.count() == len(FX.compose3(20 + i))
+        counts.append(jsc.getPersistentRDDs().size())
+    assert counts == [before] * 3
 
 
 def test_new_spans_keys_on_trace_and_span_id(spark):
