@@ -18,8 +18,7 @@ This package re-expresses that capability Spark-first:
                      execution backend (Try monad, timeouts, short-circuit)
 - ``streaming``    : ``stream_task_runs`` (the task_runs summary over a
                      growing span-log directory via Structured Streaming)
-                     and the ``SpanRecorder`` snapshot-diff, plus stateful,
-                     interval-join, MV merge-sink and progress helpers
+                     and the ``SpanRecorder`` snapshot-diff
 """
 
 __version__ = "0.1.0"

@@ -12,6 +12,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def filter_by_path(spans: DataFrame, keys: Sequence[str], value: Any) -> DataFrame:
@@ -20,16 +21,20 @@ def filter_by_path(spans: DataFrame, keys: Sequence[str], value: Any) -> DataFra
     (reference: Spans.filter, opentelemetry_helpers.py:373-381).
 
     Paths into the ``attributes`` map use map access (null when absent);
-    struct paths resolve via dotted column access over the closed schema.
+    struct paths resolve against the closed schema, and a path that does
+    not end at one of its leaf fields matches no span.
     """
-    col: Column
-    if keys[0] == "attributes" and len(keys) == 2:
-        col = F.col("attributes").getItem(keys[1])
-    else:
-        col = F.col(".".join(keys))
     if isinstance(value, bool):
         value = "true" if value else "false"
-    return spans.where(col == F.lit(value))
+    if keys[0] == "attributes" and len(keys) == 2:
+        return spans.where(F.col("attributes").getItem(keys[1]) == F.lit(value))
+    dtype: T.DataType | None = spans.schema
+    for k in keys:
+        found = isinstance(dtype, T.StructType) and k in dtype.fieldNames()
+        dtype = dtype[k].dataType if found else None
+    if not isinstance(dtype, T.AtomicType):
+        return spans.where(F.lit(False))
+    return spans.where(F.col(".".join(keys)) == F.lit(value))
 
 
 def sort_by_start_time(spans: DataFrame, reverse: bool = False) -> DataFrame:
@@ -119,17 +124,15 @@ def _any_startswith(k: Column, prefixes: Sequence[str]) -> Column:
     return cond
 
 
-def union_attributes(
-    spans: DataFrame, prefixes: Sequence[str] = (), strict: bool = True
-) -> DataFrame:
+def union_attributes(spans: DataFrame, prefixes: Sequence[str] = ()) -> DataFrame:
     """A1: conflict-checked union of all attribute maps in a span set
     (reference: Spans.get_attributes, opentelemetry_helpers.py:459-491 —
     raises if one key maps to two distinct values).
 
-    Returns one row per key: (key, value, n_values). With ``strict`` the
-    caller should assert max(n_values) == 1 — Spark aggregates cannot
-    raise mid-query, so the conflict check is an output column (SURVEY §4
-    "error-raising aggregates"). ``assert_no_conflicts`` does the check.
+    Returns one row per key: (key, value, n_values). Spark aggregates
+    cannot raise mid-query, so the conflict check is an output column
+    (SURVEY §4 "error-raising aggregates"); ``assert_no_conflicts``
+    raises on any key with n_values > 1.
     """
     exploded = (
         spans.select(F.explode_outer("attributes").alias("key", "value"))

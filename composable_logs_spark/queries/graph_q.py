@@ -15,8 +15,8 @@ Scale shape: each iteration is exactly one shuffle join keyed on src and
 one hash aggregation keyed on dst — the textbook distributed PageRank;
 partitioning by node id is reusable across iterations, and nothing is
 ever collected to the driver.  At 100 TB the edge list would be
-pre-bucketed by src (operators/bucketing.py) so the join side of every
-iteration is Exchange-free.
+pre-bucketed by src (``bucketBy``) so the join side of every iteration
+is Exchange-free.
 
 Cross-engine exactness: ranks are SCALED INTEGERS (units of 1e-12) and
 every step is integer arithmetic — `div` on positives truncates

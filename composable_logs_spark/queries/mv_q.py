@@ -45,8 +45,7 @@ def _segment(d: DataFrame) -> DataFrame:
 
 def merge_partials(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold two mergeable (cnt, sum_micro) states — the `+` of the MV
-    monoid. Used batch-side here and per-micro-batch by the streaming
-    merge sink (``streaming/mv_sink.py``); runs on the KEY space."""
+    monoid: base + delta; runs on the KEY space."""
     return (
         base.alias("b")
         .join(delta.alias("d"), ["event_type", "day"], "full_outer")

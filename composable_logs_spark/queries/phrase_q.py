@@ -14,10 +14,8 @@ excluded EXPLICITLY on both engines rather than dropped via a NULL w3).
 Pipeline:
 1. positional postings: one posexplode -> (doc_id, pos, tok) — the
    standard index layout; at 100 TB this relation is the search index
-   itself, bucketed by tok (demonstrated fact, not just a claim:
-   tests/test_bucketing.py writes the postings bucketBy(tok) and
-   asserts the df lookup's SortMergeJoin carries no Exchange on the
-   postings side and the per-tok agg reuses the join partitioning).
+   itself, bucketed by tok, so the df lookup's SortMergeJoin needs no
+   Exchange on the postings side.
 2. document frequency for the query's words only: postings semi-join
    the BROADCAST query vocabulary, one hash agg — df comes from the
    postings themselves, no side table.

@@ -53,16 +53,9 @@ _RRF_C = 60  # the standard RRF constant
 _SALT_BUCKETS = 32
 
 
-def _ranked_topk(
-    scored: DataFrame,
-    order_col,
-    k: int,
-    rank_name: str,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def _ranked_topk(scored: DataFrame, order_col, k: int, rank_name: str) -> DataFrame:
     """Salted two-phase per-query top-k (similarity_q pattern): local
-    top-k inside hash-salt buckets, global merge over buckets*k rows.
-    ``keep`` carries extra columns (e.g. the raw score) through."""
+    top-k inside hash-salt buckets, global merge over buckets*k rows."""
     order = [order_col.desc(), F.col("doc_id")]
     salted = scored.withColumn(
         "_salt", F.pmod(F.hash(F.col("doc_id")), F.lit(_SALT_BUCKETS))
@@ -77,7 +70,7 @@ def _ranked_topk(
             F.row_number().over(W.partitionBy("query_id").orderBy(*order)).cast("int"),
         )
         .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", F.col("rank").alias(rank_name), *keep)
+        .select("query_id", "doc_id", F.col("rank").alias(rank_name))
     )
 
 
@@ -95,7 +88,8 @@ def query_terms(docs: DataFrame, stride: int = _QUERY_STRIDE) -> DataFrame:
 
 
 def query_vecs(vecs: DataFrame, stride: int = _QUERY_STRIDE) -> DataFrame:
-    """(query_id, qv): the dense-side query vectors, aligned by id."""
+    """(query_id, qv): the dense-side query vectors, aligned by id.
+    Parity reference for ``_dense_scores_arrow``, used by its tests."""
     return vecs.where(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -106,7 +100,8 @@ def dense_scores(vecs: DataFrame, qvecs: DataFrame) -> DataFrame:
     vector against every query vector, self-matches excluded. The qvecs
     side is explicitly broadcast: the brute-force baseline is a cross
     join, and replicating the (bounded-stride) query panel is the only
-    sane physical strategy for it — the IVF family is the scale path."""
+    sane physical strategy for it — the IVF family is the scale path.
+    Parity reference for ``_dense_scores_arrow``, used by its tests."""
     dot = F.aggregate(
         F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
     )
@@ -138,8 +133,7 @@ def _dense_scores_arrow(
     the 6dp rounding stays in Spark (HALF_UP). Query vectors (vec_id %
     stride == 0) are re-read per task from the input parquet — init
     once per task, no driver collect. The path must be
-    executor-readable (true for any shared-storage deployment; the
-    expression form ``dense_scores`` is the fallback where it is not).
+    executor-readable (true for any shared-storage deployment).
 
     r14 (ADVICE): the panel is extracted record-batch-at-a-time with a
     boolean mask, so a task holds only the ~1/stride query rows as
@@ -299,7 +293,8 @@ def rrf_rank(
 
 def to_vecs(emb: DataFrame) -> DataFrame:
     """(vec_id, v): embeddings widened to double for exact-6dp rounding
-    parity with the DuckDB oracle."""
+    parity with the DuckDB oracle. Parity reference for
+    ``_dense_scores_arrow``, used by its tests."""
     return emb.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )

@@ -3,7 +3,7 @@
 Raw span logs arrive as append-only JSONL (reference emits one JSON span
 per line — ``opentelemetry_helpers.py:499-500``); at scale you do not
 query months of JSONL. The archive step rewrites them columnar,
-partitioned by ingest date, so that:
+partitioned by the UTC date of each span's start, so that:
 
 - span queries scan parquet with column pruning (a task_runs summary
   reads ~6 of the span columns, not whole JSON lines),
@@ -23,7 +23,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.dataset import write_dataset
 from .schema import SPAN_SCHEMA
 from .sources import read_span_jsonl
 
@@ -31,22 +30,19 @@ _DATE_COL = "archive_date"
 
 
 def archive_spans(
-    spark: SparkSession,
-    log_dir: str | Path,
-    archive_dir: str | Path,
-    files_per_day: int = 1,
+    spark: SparkSession, log_dir: str | Path, archive_dir: str | Path
 ) -> None:
     """Rewrite a JSONL span-log directory as a date-partitioned parquet
-    archive (partition key = UTC date of span start_time)."""
-    spans = read_span_jsonl(spark, log_dir).withColumn(
-        _DATE_COL, F.to_date(F.to_timestamp(F.col("start_time")))
-    )
-    write_dataset(
-        spans,
-        archive_dir,
-        partition_by=[_DATE_COL],
-        files_per_value=files_per_day,
-        mode="overwrite",
+    archive (partition key = UTC date of span start_time, whatever the
+    session time zone), one parquet file per date directory."""
+    start_s = F.unix_seconds(F.to_timestamp(F.col("start_time")))
+    day = F.date_from_unix_date(F.floor(start_s / 86400).cast("int"))
+    spans = read_span_jsonl(spark, log_dir).withColumn(_DATE_COL, day)
+    (
+        spans.repartition(_DATE_COL)
+        .write.mode("overwrite")
+        .partitionBy(_DATE_COL)
+        .parquet(str(archive_dir))
     )
 
 

@@ -68,124 +68,3 @@ def test_streaming_fold_matches_batch_mv(spark, tmp_path, sf_dir):
         assert r["sum_value"] == sign * ((abs(sm) + 5000) // 10000) / 100.0
     # the delta genuinely changed the view (not a no-op second batch)
     assert sum(n for n, _ in streamed.values()) > base_events
-
-
-def test_update_mode_merge_sink_matches_flat(spark, tmp_path, sf_dir):
-    """The UNBOUNDED-key-space path: a stateless streaming query whose
-    foreachBatch folds per-batch partials into a persisted MV table via
-    the shared merge algebra — no streaming aggregation, no
-    complete-mode re-emit of the whole result. After base + delta
-    arrivals the merged table must equal the flat recompute (and the
-    batch operator's output) exactly, including the derived columns."""
-    from composable_logs_spark.streaming.mv_sink import start_mv_merge_stream
-
-    ev = load(spark, sf_dir, "events").select("event_type", "ts", "value")
-    src = str(tmp_path / "usrc")
-    base = ev.where(F.col("ts") < _CUTOFF)
-    delta = ev.where(F.col("ts") >= _CUTOFF)
-    base.coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    q, sink = start_mv_merge_stream(
-        stream, spark, str(tmp_path / "mv_state"), str(tmp_path / "uckpt")
-    )
-    try:
-        q.processAllAvailable()
-        state_after_base = {
-            (r["event_type"], r["day"]): r["cnt"]
-            for r in sink.current_state().collect()
-        }
-        assert state_after_base
-        delta.coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        # the plan is genuinely stateless: no stateful operators
-        assert q.lastProgress["stateOperators"] in ([], None)
-        merged_view = sink.view().collect()
-    finally:
-        q.stop()
-
-    # == the batch operator (itself gate-proven == flat recompute)
-    batch = {
-        (r["event_type"], r["day"]): r for r in mv_incremental_merge(spark, sf_dir).collect()
-    }
-    assert len(merged_view) == len(batch)
-    for r in merged_view:
-        b = batch[(r["event_type"], r["day"])]
-        assert (r["n_events"], r["sum_value"], r["avg_value"]) == (
-            b["n_events"], b["sum_value"], b["avg_value"]
-        )
-    # update semantics: the delta batch only ADDED/updated keys, and
-    # base-only keys survived untouched
-    merged_cnt = {
-        (r["event_type"], r["day"]): r["n_events"] for r in merged_view
-    }
-    assert all(
-        merged_cnt[k] >= v for k, v in state_after_base.items()
-    )
-
-
-def test_merge_sink_batch_replay_is_idempotent(spark, tmp_path, sf_dir):
-    """foreachBatch re-delivers the last batch after a restart; folding
-    the same batch_id twice must not double-count (the sink rebuilds
-    that version from its predecessor)."""
-    from composable_logs_spark.streaming.mv_sink import MVMergeSink
-
-    ev = (
-        load(spark, sf_dir, "events")
-        .select("event_type", "ts", "value")
-        .limit(200)
-        .cache()
-    )
-    sink = MVMergeSink(spark, str(tmp_path / "rstate"))
-    half1 = ev.where(F.col("value") < 50)
-    half2 = ev.where(F.col("value") >= 50)
-    sink.fold(half1, 0)
-    sink.fold(half2, 1)
-    once = sorted(map(tuple, sink.current_state().collect()))
-    sink.fold(half2, 1)  # replay of batch 1
-    twice = sorted(map(tuple, sink.current_state().collect()))
-    assert once == twice
-
-
-def test_merge_sink_retention_prunes_old_versions(spark, tmp_path, sf_dir):
-    """A long-running stream must not accumulate one state directory
-    per micro-batch forever: after each fold, only the `retain` newest
-    versions survive, the view still equals the full fold, and a replay
-    of the LAST batch still works from the surviving predecessor."""
-    import os
-
-    from composable_logs_spark.streaming.mv_sink import MVMergeSink
-
-    ev = (
-        load(spark, sf_dir, "events")
-        .select("event_type", "ts", "value")
-        .limit(300)
-        .cache()
-    )
-    state_dir = str(tmp_path / "prstate")
-    sink = MVMergeSink(spark, state_dir, retain=2)
-    part = F.pmod(F.hash("event_type", "ts", "value"), F.lit(5))
-    slices = [ev.where(part == i) for i in range(5)]
-    for i, s in enumerate(slices):
-        sink.fold(s, i)
-    # only the retain newest versions remain on disk
-    assert sorted(os.listdir(state_dir)) == ["v=3", "v=4"]
-    full = {
-        (r["event_type"], r["day"]): (r["cnt"], r["sum_micro"])
-        for r in sink.current_state().collect()
-    }
-    # == one-shot aggregation of everything (retention lost no counts)
-    from composable_logs_spark.queries.mv_q import _segment
-
-    flat = {
-        (r["event_type"], r["day"]): (r["cnt"], r["sum_micro"])
-        for r in _segment(ev).collect()
-    }
-    assert full == flat
-    # replay of the last batch folds from v=3, still present
-    sink.fold(slices[4], 4)
-    again = {
-        (r["event_type"], r["day"]): (r["cnt"], r["sum_micro"])
-        for r in sink.current_state().collect()
-    }
-    assert again == full

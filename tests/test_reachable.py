@@ -16,10 +16,10 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = "composable_logs_spark"
 
 # The engine's entry points: `__spark_entry__` and the query registry,
-# the two CLIs, each layer's public package, the paper features and the
-# tested merge / bucketing / stream-join / stateful / MV-sink / progress
-# helpers kept as library surface, and every perfbench / tools script
-# (added in `unreached`). `queries/__init__.py::_QUERY_MODULES` is read from its AST,
+# the two CLIs, each layer's public package, the paper features, and
+# every perfbench / tools script (added in `unreached`). Nothing else
+# belongs here: a module only tests import is dead code, deleted with its
+# tests. `queries/__init__.py::_QUERY_MODULES` is read from its AST,
 # because `all_queries` loads those modules by name.
 ENTRY_MODULES = (
     f"{PKG}.cli",
@@ -35,12 +35,6 @@ ENTRY_MODULES = (
     f"{PKG}.orchestrator.env_attrs",
     f"{PKG}.orchestrator.ftp_artifacts",
     f"{PKG}.orchestrator.mlflow_shim",
-    f"{PKG}.operators.merge",
-    f"{PKG}.operators.bucketing",
-    f"{PKG}.streaming.joins",
-    f"{PKG}.streaming.stateful",
-    f"{PKG}.streaming.mv_sink",
-    f"{PKG}.streaming.metrics",
 )
 
 

@@ -1,7 +1,6 @@
 """Sinks (S6/S7/S9), streaming ingest (S5), SpanRecorder, multimodal."""
 
 import json
-import time
 from datetime import datetime
 from pathlib import Path
 
@@ -369,41 +368,6 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     assert len(streamed) == len(set(streamed)) == 6  # no dup rows emitted
     batch_rows = summarize_spans(read_span_jsonl(spark, log_dir)).task_runs
     assert set(streamed) == {(r["run_id"], r["task_id"]) for r in batch_rows.collect()}
-
-
-def test_stream_progress_metrics(spark, tmp_path):
-    """ProgressRecorder captures per-batch rows + durations for an
-    ingest query (the alert-on-lag observability hook)."""
-    from composable_logs_spark.streaming.metrics import (
-        attach_progress_recorder,
-        detach,
-    )
-
-    log_dir = tmp_path / "log"
-    ckpt = tmp_path / "ckpt"
-    log_dir.mkdir()
-    SpanWriter(log_dir).write_many(FX.compose3(0))
-
-    rec = attach_progress_recorder(spark)
-    try:
-        q = stream_task_runs(spark, log_dir, lambda df, bid: df.count(), str(ckpt))
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # listener events are delivered asynchronously
-        import time
-
-        deadline = time.time() + 30
-        while time.time() < deadline and not rec.progress:
-            time.sleep(0.5)
-    finally:
-        detach(spark, rec)
-
-    batches = [p for p in rec.progress if p["num_input_rows"] > 0]
-    assert batches, rec.progress
-    assert all(p["duration_ms"] for p in batches)
-    assert sum(p["num_input_rows"] for p in batches) >= 10  # compose3 spans
 
 
 def test_media_features_roundtrip(spark, sf_dir):

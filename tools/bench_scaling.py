@@ -76,9 +76,9 @@ def main() -> None:
     # floors it — e.g. the 39MB 64x documents file gets 10 splits, so
     # the hot map stage (tokenize/gram emit) runs 10-wide on a 32-core
     # box and the measured "scaling" is a parallelism floor, not the
-    # algorithm (found r12; the r7 biggen files_per_day lesson in scan
-    # form). Lower both so every scale factor scans full-width; a real
-    # cluster gets this for free from many input files.
+    # algorithm (found r12). Lower both so every scale factor scans
+    # full-width; a real cluster gets this for free from many input
+    # files.
     spark = get_spark(
         "bench_scaling",
         extra_conf={
