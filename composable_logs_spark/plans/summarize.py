@@ -1,34 +1,22 @@
-"""parse_spans as one grouped pass per workflow run (SURVEY §3.2).
+"""parse_spans as one kernel per workflow run (SURVEY §3.2).
 
 Reference: opentelemetry_task_span_parser.py:413-445 plus its iterators
 (_task_run_iterator :378-410, _artefact_iterator :147-167,
-_get_logged_named_values :189-228). Output tables follow FIXTURES.md A3:
-
-    workflow_runs(run_id, span_id, start_time, end_time, duration_s,
-                  is_success, attributes)
-    task_runs(run_id, span_id, parent_span_id, task_id, task_type,
-              start_time, end_time, duration_s, n_exceptions, attributes,
-              is_success)
-    deps(run_id, from_span_id, to_span_id)
-    logged_values(run_id, task_span_id, name, type, value_str, value_long,
-                  value_double, value_bool, value_json)
-    artifacts(run_id, task_span_id, name, type, content, length)
-    validation_errors(run_id, task_span_id, kind, detail)
+_get_logged_named_values :189-228). Output tables follow FIXTURES.md A3;
+``_TABLES`` lists their columns.
 
 Design: runs are independent and small, and the reference summarises
-one run at a time with a tree walk, so this does the same in three
-steps with one shuffle per input:
-
-1. Spark projects each span to the narrow fields the walk needs: ids,
-   start/end as epoch micros, its exception count, its ``task.*`` and
-   ``workflow.*`` attributes, data-span payloads and dependency ids.
-2. ``groupBy("run_id").applyInArrow(summarize_run)`` hands each run to
-   plain Python, which resolves every span's execute-task owners with a
-   parent-pointer walk and builds one row per run holding an
-   array-of-struct column per table.
-3. Spark applies the per-row expressions (timestamps, durations, value
-   casts, artefact decoding) to those arrays, so Spark's rounding, cast
-   and ANSI semantics apply exactly as in a column-at-a-time plan.
+one run at a time with a tree walk, so one kernel does the same:
+``summarize_run`` maps a run's raw span rows to that run's finished
+rows, in the tables' final types, in plain Python. Spark distributes
+it and computes nothing: one ``select`` keeps the span columns the
+kernel reads (so a parquet archive prunes the rest), and
+``groupBy("run_id").applyInArrow(summarize_run)`` hands each run to the
+kernel, one shuffle per input. The kernel follows Spark's semantics
+for these rows (the timestamp forms ``to_timestamp`` reads, ``round`` of
+the durations, ANSI value casts, ``unbase64``; pinned row by row in
+``tests/test_summarize_edges.py``), and a malformed timestamp, value or
+artefact fails the run with a ``ValueError`` naming the run and span.
 
 Span ids are unique only within a trace (run_id = trace_id), so all
 span linkage happens inside one run's group.
@@ -40,6 +28,9 @@ A run above ``MAX_SPANS_PER_RUN`` spans fails loudly, naming the run.
 
 from __future__ import annotations
 
+import datetime
+import functools
+import re
 from collections import Counter
 from dataclasses import dataclass, field
 
@@ -49,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..spanlog import schema as S
-from ..spanlog.codec import decode_columns
+from ..spanlog.codec import artefact_bytes, typed_value
 from ..spanlog.schema import MAX_SPANS_PER_RUN
 
 
@@ -81,37 +72,83 @@ class SpanSummary:
         self.runs.unpersist()
 
 
-_STR = pa.string()
-_ATTRS = pa.map_(pa.string(), pa.string())
+# The span columns the kernel reads; run_id = trace_id is on every span (FIXTURES A1).
+_SPAN_COLUMNS = (
+    "context.trace_id AS run_id", "context.span_id AS span_id", "parent_id", "name",
+    "start_time", "end_time", "status.status_code AS status_code", "attributes",
+    "events.name AS events", "links",
+)
 
-
-def _rows(*fields) -> pa.DataType:
-    return pa.list_(pa.struct([pa.field(n, t) for n, t in fields]))
-
-
+# Each table's columns after run_id (FIXTURES.md A3) and their Arrow
+# types; a column not in _TYPES is a string.
+_TABLES = {
+    "workflow_runs": "span_id start_time end_time duration_s is_success attributes",
+    "task_runs": "span_id parent_span_id task_id task_type start_time end_time duration_s "
+    "n_exceptions attributes is_success",
+    "deps": "from_span_id to_span_id",
+    "logged_values": "task_span_id name type value_str value_long value_double value_bool "
+    "value_json",
+    "artifacts": "task_span_id name type content length",
+    "validation_errors": "task_span_id kind detail",
+}
+_TIME, _DOUBLE, _BOOL, _LONG = pa.timestamp("us", tz="UTC"), pa.float64(), pa.bool_(), pa.int64()
+_TYPES = {
+    "start_time": _TIME, "end_time": _TIME, "duration_s": _DOUBLE, "value_double": _DOUBLE,
+    "is_success": _BOOL, "value_bool": _BOOL, "value_long": _LONG, "length": _LONG,
+    "n_exceptions": pa.int32(), "content": pa.binary(),
+    "attributes": pa.map_(pa.string(), pa.string()),
+}
 _RUN_SCHEMA = pa.schema(
-    [
-        ("run_id", _STR),
-        ("workflow_runs", _rows(
-            ("span_id", _STR), ("start_us", pa.int64()), ("end_us", pa.int64()),
-            ("is_success", pa.bool_()), ("attributes", _ATTRS),
-        )),
-        ("task_runs", _rows(
-            ("span_id", _STR), ("parent_span_id", _STR), ("task_id", _STR),
-            ("task_type", _STR), ("start_us", pa.int64()), ("end_us", pa.int64()),
-            ("n_exceptions", pa.int32()), ("attributes", _ATTRS),
-        )),
-        ("deps", _rows(("from_span_id", _STR), ("to_span_id", _STR))),
-        ("logged_values", _rows(
-            ("task_span_id", _STR), ("name", _STR), ("type", _STR), ("content_encoded", _STR),
-        )),
-        ("artifacts", _rows(
-            ("task_span_id", _STR), ("name", _STR), ("type", _STR),
-            ("encoding", _STR), ("content_encoded", _STR),
-        )),
-        ("validation_errors", _rows(("task_span_id", _STR), ("kind", _STR), ("detail", _STR))),
+    [("run_id", pa.string())]
+    + [
+        (table, pa.list_(pa.struct([(c, _TYPES.get(c, pa.string())) for c in columns.split()])))
+        for table, columns in _TABLES.items()
     ]
 )
+
+# The ISO 8601 forms Spark's to_timestamp reads from OTel JSON: a date,
+# optionally a [h]h:[m]m:[s]s time after "T" or " " with any number of
+# fraction digits (those past the 6th ignored) and a "Z" or +-h[h][[:]mm] zone.
+_TIMESTAMP = re.compile(
+    r"[\x00-\x20]*(\d{4})(?:-(\d\d?)(?:-(\d\d?)(?:[T ](\d\d?):(\d\d?):(\d\d?)(?:\.(\d*))?"
+    r"(?:Z|([+-])(\d\d?)(?::?(\d\d))?)?)?)?)?[\x00-\x20]*",
+    re.ASCII,
+)
+_EPOCH_DAY = datetime.date(1970, 1, 1).toordinal()
+
+
+@functools.lru_cache(maxsize=1024)
+def _day(y: str, mo: str | None, d: str | None) -> int:
+    """Days since the epoch; a run's spans share a few dates."""
+    return datetime.date(int(y), int(mo or 1), int(d or 1)).toordinal() - _EPOCH_DAY
+
+
+def _micros(ts: str | None) -> int | None:
+    """Epoch µs of an ISO 8601 string, as ``unix_micros(to_timestamp(ts))``; a
+    zone-less string is UTC, the session zone ``session.get_spark`` sets."""
+    if ts is None:
+        return None
+    m = _TIMESTAMP.fullmatch(ts)
+    if m is None:
+        raise ValueError(f"malformed timestamp {ts!r}")
+    y, mo, d, h, mi, s, frac, sign, zh, zm = m.groups()
+    h, mi, s, zm = int(h or 0), int(mi or 0), int(s or 0), int(zm or 0)
+    zone = int(zh or 0) * 60 + zm
+    if h > 23 or mi > 59 or s > 59 or zm > 59 or zone > 18 * 60:
+        raise ValueError(f"field out of range in timestamp {ts!r}")
+    minutes = (_day(y, mo, d) * 24 + h) * 60 + mi - (zone if sign == "+" else -zone)
+    return (minutes * 60 + s) * 1_000_000 + int((frac or "")[:6].ljust(6, "0"))
+
+
+def _seconds(start_us: int | None, end_us: int | None) -> float | None:
+    """C2: Spark's ``round(µs / 1e6, 3)`` (Timing.get_duration_s,
+    opentelemetry_task_span_parser.py:250-253): whole milliseconds,
+    rounded half away from zero, unlike Python's ``round``."""
+    if start_us is None or end_us is None:
+        return None
+    us = end_us - start_us
+    ms = (abs(us) + 500) // 1000
+    return (ms if us >= 0 else -ms) / 1000
 
 
 def nulls_first(*vals) -> tuple:
@@ -125,7 +162,7 @@ def _min_wins(union: dict[str, set]) -> dict[str, str | None]:
 
 
 def _add_attrs(union: dict[str, set], entries) -> None:
-    for k, v in entries or ():
+    for k, v in entries:
         vals = union.setdefault(k, set())
         if v is not None:
             vals.add(v)
@@ -136,24 +173,34 @@ class _Task:
         self.i = i
         self.n_exc = 0
         self.attrs: dict[str, set] = {}
-        self.values: list[dict] = []
+        self.values: list[int] = []  # data span indices
         self.value_names: Counter = Counter()
-        self.artifacts: dict[str | None, dict] = {}  # name -> last artefact
+        self.artifacts: dict[str | None, int] = {}  # name -> last artefact span
 
 
 def summarize_run(table: pa.Table, max_spans: int) -> pa.Table:
-    """Summarise one run's projected spans into one row of ``_RUN_SCHEMA``.
+    """Summarise one run's raw span rows (``_SPAN_COLUMNS``) into one row
+    of ``_RUN_SCHEMA``.
 
     A span belongs to itself if it is an execute-task span and to every
     execute-task ancestor within ``S.MAX_SPAN_DEPTH`` parent hops. Spans
-    are visited in ``(start_us, span_id)`` order, so every output list
+    are visited in ``(start_time, span_id)`` order, so every output list
     has a fixed order and a later artefact with the same name wins.
     """
     c = table.to_pydict()
     run_id, n = c["run_id"][0], table.num_rows
     S.check_run_size(run_id, n, max_spans)
-    sid, parent, name = c["span_id"], c["parent_id"], c["name"]
-    start, end = c["start_us"], c["end_us"]
+    sid, parent, name, attrs = c["span_id"], c["parent_id"], c["name"], c["attributes"]
+
+    def at(i: int, f, *args):
+        """``f(*args)``, its ValueError naming the run and span ``i``."""
+        try:
+            return f(*args)
+        except ValueError as e:
+            raise ValueError(f"run {run_id!r}, span {sid[i]!r}: {e}") from None
+
+    start = [at(i, _micros, t) for i, t in enumerate(c["start_time"])]
+    end = [at(i, _micros, t) for i, t in enumerate(c["end_time"])]
     order = sorted(range(n), key=lambda i: nulls_first(start[i], sid[i]))
 
     # one parent per span id (its last row's), as span_ancestors' child -> parents map
@@ -172,62 +219,76 @@ def summarize_run(table: pa.Table, max_spans: int) -> pa.Table:
 
     wf_union: dict[str, set] = {}
     deps: dict[tuple, None] = {}  # insertion-ordered set
+    data: dict[int, tuple] = {}  # data span -> (name, type, encoding, content_encoded)
     for i in order:
-        _add_attrs(wf_union, c["wf_attrs"][i])
-        for d in c["deps"][i] or ():
-            deps[d["from_span_id"], d["to_span_id"]] = None
-        data = c["data"][i]
+        entries = attrs[i] or ()
+        _add_attrs(wf_union, [(k, v) for k, v in entries if k.startswith("workflow.")])
+        if name[i] == S.SPAN_EXECUTE_TASK:  # J7
+            for link in c["links"][i] or ():
+                if link and dict(link["attributes"] or ()).get("type") == "task-dependency":
+                    deps[(link["context"] or {}).get("span_id"), sid[i]] = None
+        elif name[i] == S.SPAN_TASK_DEPENDENCY:  # J8: kept even when null
+            a = dict(entries)
+            deps[a.get("from_task_span_id"), a.get("to_task_span_id")] = None
+        if name[i] in (S.SPAN_NAMED_VALUE, S.SPAN_ARTEFACT) and c["status_code"][i] == "OK":  # F4
+            a = dict(entries)
+            data[i] = tuple(a.get(k) for k in ("name", "type", "encoding", "content_encoded"))
+        n_exc = (c["events"][i] or []).count("exception")  # A5
+        task_attrs = [(k, v) for k, v in entries if k.startswith("task.")]
         for t in owners(i):
-            t.n_exc += c["n_exc"][i]
-            _add_attrs(t.attrs, c["task_attrs"][i])
-            if data is None:
+            t.n_exc += n_exc
+            _add_attrs(t.attrs, task_attrs)
+            if i not in data:
                 continue
-            row = {"task_span_id": sid[t.i], **data}
             if name[i] == S.SPAN_NAMED_VALUE:
-                t.values.append(row)
-                t.value_names[data["name"]] += 1
+                t.values.append(i)
+                t.value_names[data[i][0]] += 1
             else:
-                t.artifacts[data["name"]] = row
+                t.artifacts[data[i][0]] = i
 
     wf_attrs = _min_wins(wf_union) if wf_union else None
     task_rows, values, artifacts, errors = [], [], [], []
     for t in tasks.values():
-        own = dict(c["task_attrs"][t.i] or ())  # the task span's own task.*
-        attrs = {**(wf_attrs or {}), **_min_wins(t.attrs)}  # prefixes are disjoint
+        task_sid = sid[t.i]
+        own = dict(attrs[t.i] or ())
         task_rows.append(
             {
-                "span_id": sid[t.i],
+                "span_id": task_sid,
                 "parent_span_id": parent[t.i],
                 "task_id": own.get("task.id"),
                 "task_type": own.get("task.type"),
-                "start_us": start[t.i],
-                "end_us": end[t.i],
+                "start_time": start[t.i],
+                "end_time": end[t.i],
+                "duration_s": _seconds(start[t.i], end[t.i]),
                 "n_exceptions": t.n_exc,
-                "attributes": sorted(attrs.items()),
+                # task.* and workflow.* are disjoint prefixes
+                "attributes": sorted({**(wf_attrs or {}), **_min_wins(t.attrs)}.items()),
+                "is_success": t.n_exc == 0,
             }
         )
-        values += t.values
-        for a in t.artifacts.values():
-            artifacts.append(a)
-            if a["name"] == "notebook.ipynb":  # reference :161-167
-                artifacts.append({**a, "name": "notebook.html", "type": "utf-8"})
-        errors += [
-            {"task_span_id": sid[t.i], "kind": "attribute-conflict", "detail": k}
-            for k, vs in sorted(t.attrs.items())
-            if len(vs) > 1
-        ]
-        errors += [
-            {"task_span_id": sid[t.i], "kind": "duplicate-named-value", "detail": k}
-            for k, m in t.value_names.items()
-            if m > 1
-        ]
+        for i in t.values:
+            key, type_, _, encoded = data[i]
+            value = at(i, typed_value, type_, encoded)
+            values.append({"task_span_id": task_sid, "name": key, "type": type_, **value})
+        for i in t.artifacts.values():
+            key, type_, encoding, encoded = data[i]
+            content = at(i, artefact_bytes, encoding, encoded)
+            length = None if content is None else len(content)
+            row = dict(task_span_id=task_sid, name=key, type=type_, content=content, length=length)
+            artifacts.append(row)
+            if key == "notebook.ipynb":  # reference :161-167
+                artifacts.append(row | {"name": "notebook.html", "type": "utf-8"})
+        conflicts = [("attribute-conflict", k) for k, vs in sorted(t.attrs.items()) if len(vs) > 1]
+        dups = [("duplicate-named-value", k) for k, m in t.value_names.items() if m > 1]
+        errors += [{"task_span_id": task_sid, "kind": e, "detail": k} for e, k in conflicts + dups]
 
     tops = [sid[i] for i in order if name[i] == S.SPAN_DAG_TOP] or [None]
-    starts = [s for s in start if s is not None]
-    ends = [e for e in end if e is not None]
+    wf_start = min((s for s in start if s is not None), default=None)
+    wf_end = max((e for e in end if e is not None), default=None)
     workflow = {
-        "start_us": min(starts, default=None),
-        "end_us": max(ends, default=None),
+        "start_time": wf_start,
+        "end_time": wf_end,
+        "duration_s": _seconds(wf_start, wf_end),
         "is_success": all(t.n_exc == 0 for t in tasks.values()),
         "attributes": None if wf_attrs is None else list(wf_attrs.items()),
     }
@@ -243,130 +304,11 @@ def summarize_run(table: pa.Table, max_spans: int) -> pa.Table:
     return pa.Table.from_pydict(row, schema=_RUN_SCHEMA)
 
 
-def _project(spans: DataFrame) -> DataFrame:
-    """The narrow per-span fields ``summarize_run`` reads.
-
-    run_id = trace_id (constant within one workflow run, FIXTURES A1):
-    the reference keys a run by its dag-top span
-    (opentelemetry_task_span_parser.py:430-433), but trace_id is on
-    EVERY span, so multi-run inputs group without locating top spans.
-    """
-    name, attrs = F.col("name"), F.col("attributes")
-
-    def prefixed(p: str):
-        return F.map_filter(attrs, lambda k, _: k.startswith(p))
-
-    def micros(ts: str):
-        return F.unix_micros(F.to_timestamp(ts))
-
-    link_deps = F.transform(
-        F.filter("links", lambda l: l["attributes"].getItem("type") == "task-dependency"),
-        lambda l: F.struct(
-            l["context"]["span_id"].alias("from_span_id"),
-            F.col("context.span_id").alias("to_span_id"),
-        ),
-    )
-    legacy_dep = F.array(
-        F.struct(
-            attrs.getItem("from_task_span_id").alias("from_span_id"),
-            attrs.getItem("to_task_span_id").alias("to_span_id"),
-        )
-    )
-    is_data = name.isin(S.SPAN_NAMED_VALUE, S.SPAN_ARTEFACT) & (
-        F.col("status.status_code") == "OK"  # F4
-    )
-    return spans.select(
-        F.col("context.trace_id").alias("run_id"),
-        F.col("context.span_id").alias("span_id"),
-        "parent_id",
-        "name",
-        micros("start_time").alias("start_us"),
-        micros("end_time").alias("end_us"),
-        # A5: count of the span's events named "exception"
-        F.coalesce(
-            F.size(F.filter("events", lambda e: e["name"] == F.lit("exception"))), F.lit(0)
-        ).alias("n_exc"),
-        prefixed("task.").alias("task_attrs"),
-        prefixed("workflow.").alias("wf_attrs"),
-        F.when(
-            is_data,
-            F.struct(*[attrs.getItem(k).alias(k) for k in ("name", "type", "encoding", "content_encoded")]),
-        ).alias("data"),
-        F.when(name == S.SPAN_EXECUTE_TASK, link_deps)  # J7
-        .when(name == S.SPAN_TASK_DEPENDENCY, legacy_dep)  # J8
-        .alias("deps"),
-    )
-
-
-def _duration_s(start_us, end_us):
-    """C2: round(µs-diff / 1e6, 3) — matches Timing.get_duration_s
-    (opentelemetry_task_span_parser.py:250-253)."""
-    return F.round((end_us - start_us) / F.lit(1_000_000.0), 3)
-
-
-def _fields(r, *names: str) -> list:
-    """Struct fields of a lambda variable, keeping their names."""
-    return [r[n].alias(n) for n in names]
-
-
-def _finish(runs: DataFrame) -> DataFrame:
-    """The per-row Spark expressions over ``summarize_run``'s arrays."""
-
-    def timed(r):
-        return [
-            F.timestamp_micros(r["start_us"]).alias("start_time"),
-            F.timestamp_micros(r["end_us"]).alias("end_time"),
-            _duration_s(r["start_us"], r["end_us"]).alias("duration_s"),
-        ]
-
-    def value(v):
-        typed = decode_columns(v["type"], v["content_encoded"])
-        return F.struct(
-            *_fields(v, "task_span_id", "name", "type"),
-            *(c.alias(n) for n, c in typed.items()),
-        )
-
-    def artifact(a):
-        content = (
-            F.when(a["encoding"] == "base64", F.unbase64(a["content_encoded"]))
-            .otherwise(F.encode(a["content_encoded"], "utf-8"))
-        )
-        return F.struct(*_fields(a, "task_span_id", "name", "type"), content.alias("content"))
-
-    return runs.select(
-        "run_id",
-        F.transform(
-            "workflow_runs",
-            lambda w: F.struct(
-                *_fields(w, "span_id"), *timed(w), *_fields(w, "is_success", "attributes")
-            ),
-        ).alias("workflow_runs"),
-        F.transform(
-            "task_runs",
-            lambda t: F.struct(
-                *_fields(t, "span_id", "parent_span_id", "task_id", "task_type"),
-                *timed(t),
-                *_fields(t, "n_exceptions", "attributes"),
-                (t["n_exceptions"] == 0).alias("is_success"),
-            ),
-        ).alias("task_runs"),
-        "deps",
-        F.transform("logged_values", value).alias("logged_values"),
-        F.transform(
-            F.transform("artifacts", artifact),
-            lambda a: F.struct(
-                *_fields(a, "task_span_id", "name", "type", "content"),
-                F.length(a["content"]).cast("long").alias("length"),
-            ),
-        ).alias("artifacts"),
-        "validation_errors",
-    )
-
-
 def summarize_spans(spans: DataFrame) -> SpanSummary:
-    """Summarise every run in ``spans``; one shuffle, one cached frame."""
+    """Summarise every run in ``spans``: the kernel's columns, one shuffle
+    into ``summarize_run`` per run, one cached frame."""
     limit = MAX_SPANS_PER_RUN  # read on the driver; travels with the lambda
-    runs = _project(spans).groupBy("run_id").applyInArrow(
+    runs = spans.selectExpr(*_SPAN_COLUMNS).groupBy("run_id").applyInArrow(
         lambda table: summarize_run(table, limit), from_arrow_schema(_RUN_SCHEMA)
     )
-    return SpanSummary(_finish(runs).cache())
+    return SpanSummary(runs.cache())

@@ -80,8 +80,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-# One module per operator family. Later modules override earlier names
-# on a clash, so the order matters.
+# One module per operator family; a query name belongs to one module.
 _QUERY_MODULES = (
     "tpch_full", "asof_q", "session_q", "pipeline_q", "graph_q", "stats_q",
     "bloom_q", "multimodal_q", "streaming_q", "sketch_q", "srp_lsh_q",
@@ -102,7 +101,12 @@ _QUERY_MODULES = (
 
 
 def all_queries() -> dict[str, QuerySpec]:
+    """Every module's queries; a name two modules define raises ``ValueError``."""
     out: dict[str, QuerySpec] = {}
-    for name in _QUERY_MODULES:
-        out.update(importlib.import_module(f"{__name__}.{name}").QUERIES)
+    home: dict[str, str] = {}
+    for module in _QUERY_MODULES:
+        for name, spec in importlib.import_module(f"{__name__}.{module}").QUERIES.items():
+            if name in home:
+                raise ValueError(f"query {name!r} is defined in both {home[name]} and {module}")
+            out[name], home[name] = spec, module
     return out

@@ -7,13 +7,16 @@ Every list has an explicit order, independent of Spark's partitioning:
 workflows by ``run_id``, tasks by ``(start_time, span_id)``, deps by
 ``(to_span_id, from_span_id)``; values and artefacts keep the summary's
 ``(start_time, span_id)`` span order, so a later duplicate name wins.
+Timestamps are naive UTC datetimes whatever the process's ``TZ``.
 """
 
 from __future__ import annotations
 
+import datetime
 from dataclasses import dataclass
 
 from ..plans.summarize import SpanSummary, nulls_first
+from ..spanlog.codec import VALUE_COLUMNS
 
 
 @dataclass
@@ -42,8 +45,13 @@ class Report:
 
 
 def _value_of(v: dict):
-    cols = ("value_str", "value_long", "value_double", "value_bool", "value_json")
-    return next((v[k] for k in cols if v[k] is not None), None)
+    return next((v[k] for k in VALUE_COLUMNS if v[k] is not None), None)
+
+
+def _utc(ts: datetime.datetime | None) -> datetime.datetime | None:
+    """``collect()`` gives a timestamp as a naive datetime in the process's
+    local zone (``fold`` set in a DST overlap); the same instant, naive UTC."""
+    return None if ts is None else ts.astimezone(datetime.timezone.utc).replace(tzinfo=None)
 
 
 def _by_task(run_id: str, rows: list[dict]) -> dict:
@@ -67,6 +75,8 @@ def collect_report(source: SpanSummary | Report) -> Report:
         report = Report([], [], {}, {}, {}, {})
         for r in runs:
             rid = r["run_id"]
+            for row in r["workflow_runs"] + r["task_runs"]:
+                row["start_time"], row["end_time"] = _utc(row["start_time"]), _utc(row["end_time"])
             report.workflows += [{"run_id": rid, **w} for w in r["workflow_runs"]]
             tasks = [{"run_id": rid, **t} for t in r["task_runs"]]
             report.tasks += tasks

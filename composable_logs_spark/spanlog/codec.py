@@ -6,25 +6,21 @@ Semantics match the reference's SerializedData
 string), ``base64`` (bytes), ``json`` (everything else). Logging ``None``
 is rejected (reference :137-138). Round-trip law: decode(encode(x)) == x.
 
-Two layers are provided:
-- Python-side ``SerializedData`` used by the orchestrator/logger when it
-  writes spans, and
-- Spark-side column expressions (``decode_columns``) that turn a logged
-  value's (type, encoded_content) pair into typed columns. Summarisation
-  applies them to each logged value inside its per-run arrays
-  (``plans/summarize.py::_finish``); they are built-in functions only,
-  no UDF.
+``typed_value`` and ``artefact_bytes`` read a span's triple into the
+summary's ``logged_values`` columns and artefact content (FIXTURES.md
+A3). They read as Spark's ANSI casts and ``unbase64`` do: integers and
+booleans trimmed, Java's double grammar plus ``inf``/``nan``, and base64
+that skips characters outside its alphabet. Malformed content raises
+``ValueError``; it never reads as null.
 """
 
 from __future__ import annotations
 
 import base64
 import json
+import re
 from dataclasses import dataclass
 from typing import Any
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 VALID_TYPES = ("utf-8", "bytes", "int", "float", "bool", "json")
 VALID_ENCODINGS = ("utf-8", "base64", "json")
@@ -66,15 +62,75 @@ class SerializedData:
         raise ValueError(f"Unknown type/encoding pair ({self.type}, {self.encoding})")
 
 
-def decode_columns(type_col: Column, content_col: Column) -> dict[str, Column]:
-    """Spark-native decode of a (type, encoded_content) pair into the
-    ``logged_values`` table's typed columns (at most one non-null per
-    row; a ``bytes`` value keeps only its type) — see FIXTURES.md A3.
-    """
-    return {
-        "value_str": F.when(type_col == "utf-8", content_col),
-        "value_long": F.when(type_col == "int", content_col.cast("long")),
-        "value_double": F.when(type_col == "float", content_col.cast("double")),
-        "value_bool": F.when(type_col == "bool", content_col.cast("boolean")),
-        "value_json": F.when(type_col == "json", content_col),
-    }
+_TRIM = "".join(map(chr, range(0x21)))  # control characters and space
+_LONG = re.compile(r"[+-]?[0-9]+")
+_DOUBLE = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?[fFdD]?)"
+)
+_BOOLS = dict.fromkeys(["t", "true", "y", "yes", "1"], True)
+_BOOLS |= dict.fromkeys(["f", "false", "n", "no", "0"], False)
+_NOT_BASE64 = re.compile(r"[^A-Za-z0-9+/]")
+
+
+def _long(s: str) -> int:
+    t = s.strip(_TRIM)
+    if _LONG.fullmatch(t) and -(2**63) <= int(t) < 2**63:
+        return int(t)
+    raise ValueError(f"{s!r} is not a bigint")
+
+
+def _double(s: str) -> float:
+    t = s.strip(_TRIM)
+    if _DOUBLE.fullmatch(t):
+        return float(t.rstrip("fFdD"))
+    if t.lower() in ("inf", "+inf", "infinity", "+infinity", "-inf", "-infinity", "nan"):
+        return float(t)
+    raise ValueError(f"{s!r} is not a double")
+
+
+def _bool(s: str) -> bool:
+    try:
+        return _BOOLS[s.strip(_TRIM).lower()]
+    except KeyError:
+        raise ValueError(f"{s!r} is not a boolean") from None
+
+
+_READERS = {
+    "utf-8": ("value_str", str),
+    "int": ("value_long", _long),
+    "float": ("value_double", _double),
+    "bool": ("value_bool", _bool),
+    "json": ("value_json", str),
+}
+VALUE_COLUMNS = tuple(column for column, _ in _READERS.values())
+
+
+def typed_value(type_: str | None, content: str | None) -> dict[str, Any]:
+    """The ``VALUE_COLUMNS`` of one logged value: the column its type
+    names holds the value, every other column is null, and a ``bytes``
+    value fills none."""
+    out = dict.fromkeys(VALUE_COLUMNS)
+    column, read = _READERS.get(type_, (None, None))
+    if column is not None and content is not None:
+        out[column] = read(content)
+    return out
+
+
+def artefact_bytes(encoding: str | None, content: str | None) -> bytes | None:
+    """An artefact's content: ``base64`` decoded as Java's MIME decoder
+    does (characters outside the alphabet skipped, padding optional but
+    checked where present), any other encoding as UTF-8 text."""
+    if content is None or encoding != "base64":
+        return None if content is None else content.encode()
+    head, pad, tail = content.partition("=")
+    data = _NOT_BASE64.sub("", head)
+    unit = len(data) % 4
+    if pad and (unit == 0 or (unit == 2 and not tail.startswith("="))):
+        raise ValueError("base64: Input byte array has wrong 4-byte ending unit")
+    if unit == 1:
+        raise ValueError("base64: Last unit does not have enough valid bits")
+    if unit == 2 and pad:
+        tail = tail[1:]
+    if _NOT_BASE64.sub("", tail):
+        raise ValueError("base64: Input byte array has incorrect ending byte")
+    return base64.b64decode(data + "=" * (-len(data) % 4))

@@ -120,3 +120,13 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
     schemas = re.findall(r"ReadSchema: ([^\n]*)", plan)
     assert schemas, plan
     assert all("l_comment" not in s for s in schemas), schemas
+
+
+def test_all_queries_rejects_a_name_two_modules_define(monkeypatch):
+    import composable_logs_spark.queries as Q
+
+    names = list(all_queries())
+    assert len(names) == len(set(names))
+    monkeypatch.setattr(Q, "_QUERY_MODULES", Q._QUERY_MODULES + ("span_q",))
+    with pytest.raises(ValueError, match=r"query 'spanlog_\w+' is defined in both span_q and span_q"):
+        Q.all_queries()

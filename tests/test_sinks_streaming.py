@@ -1,6 +1,7 @@
 """Sinks (S6/S7/S9), streaming ingest (S5), SpanRecorder, multimodal."""
 
 import json
+import time
 from datetime import datetime
 from pathlib import Path
 
@@ -459,3 +460,24 @@ def test_report_bytes_independent_of_shuffle_partitions(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert outs[0] == outs[1]
+
+
+def test_report_bytes_independent_of_process_tz(spark, tmp_path, monkeypatch):
+    # collect() turns a timestamp into a naive datetime in the Python
+    # process's local zone; the report must read the same in any zone
+    outs = []
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            monkeypatch.setenv("TZ", tz)
+            time.tzset()
+            s = summarize_spans(spans_df(spark, FX.compose3(0)))
+            www = write_static_data(s, tmp_path / tz.replace("/", "-")).parent
+            outs.append({str(p.relative_to(www)): p.read_bytes() for p in www.rglob("*.*")})
+            s.release()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert outs[0] == outs[1]
+    gantt = next(v for k, v in outs[1].items() if k.endswith("gantt.mmd")).decode()
+    assert "1672531200 , 1672531201" in gantt
+    assert '"start_time": "2023-01-01 00:00:00"' in outs[1]["static_data.json"].decode()

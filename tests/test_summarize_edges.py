@@ -228,3 +228,74 @@ def test_malformed_base64_artefact_fails_the_run(spark):
             s.artifacts.collect()
     finally:
         s.release()
+
+
+def test_malformed_start_time_names_the_run_and_span(spark):
+    from pyspark.errors import PythonException
+
+    spans = edge_spans()[:1] + [
+        _span("late", "execute-task", "2023-01-01T00:00Z", "2023-01-01T00:00:01Z", "top")
+    ]
+    s = summarize_spans(spans_df(spark, spans))  # lazy, like the span limit
+    try:
+        with pytest.raises(
+            PythonException,
+            match=rf"ValueError: run '{RUN}', span 'late': malformed timestamp '2023-01-01T00:00Z'",
+        ):
+            s.task_runs.collect()
+    finally:
+        s.release()
+
+
+def test_kernel_runs_without_spark():
+    import pyarrow as pa
+
+    from composable_logs_spark.plans.summarize import _RUN_SCHEMA, summarize_run
+
+    attrs = pa.map_(pa.string(), pa.string())
+    link = pa.struct([
+        ("context", pa.struct([("trace_id", pa.string()), ("span_id", pa.string())])),
+        ("attributes", attrs),
+    ])
+    dep = [{"context": {"trace_id": "r", "span_id": "a"}, "attributes": [("type", "task-dependency")]}]
+    table = pa.table(
+        {
+            "run_id": ["r"] * 4,
+            "span_id": ["top", "a", "b", "v"],
+            "parent_id": [None, "top", "top", "a"],
+            "name": ["dag-top-span", "execute-task", "execute-task", "named-value"],
+            "start_time": ["2023-01-01T00:00:00Z", "2023-01-01T00:00:00Z",
+                           "2023-01-01T00:00:01Z", "2023-01-01T00:00:00.5Z"],
+            "end_time": ["2023-01-01T00:00:03Z", "2023-01-01T00:00:00.0015Z",
+                         "2023-01-01T00:00:02Z", "2023-01-01T00:00:00.5Z"],
+            "status_code": ["OK", "ERROR", "OK", "OK"],
+            "attributes": [
+                [("workflow.env", "w")], [("task.id", "a")], [("task.id", "b")],
+                [("name", "n"), ("type", "float"), ("encoding", "json"), ("content_encoded", "1e3")],
+            ],
+            "events": [None, ["exception"], [], None],
+            "links": [None, None, dep, None],
+        },
+        schema=pa.schema([
+            *[(c, pa.string()) for c in ("run_id", "span_id", "parent_id", "name", "start_time",
+                                         "end_time", "status_code")],
+            ("attributes", attrs), ("events", pa.list_(pa.string())), ("links", pa.list_(link)),
+        ]),
+    )
+    out = summarize_run(table, max_spans=4)
+    assert out.schema == _RUN_SCHEMA
+    row = out.to_pylist()[0]
+    tasks = {t["task_id"]: t for t in row["task_runs"]}
+    assert tasks["a"]["duration_s"] == 0.002  # 1,500 µs rounds half up
+    assert (tasks["a"]["n_exceptions"], tasks["a"]["is_success"]) == (1, False)
+    assert tasks["b"]["attributes"] == [("task.id", "b"), ("workflow.env", "w")]
+    assert row["deps"] == [{"from_span_id": "a", "to_span_id": "b"}]
+    assert row["logged_values"] == [
+        {"task_span_id": "a", "name": "n", "type": "float", "value_str": None, "value_long": None,
+         "value_double": 1000.0, "value_bool": None, "value_json": None}
+    ]
+    [wf] = row["workflow_runs"]
+    assert (wf["span_id"], wf["duration_s"], wf["is_success"]) == ("top", 3.0, False)
+    assert str(wf["start_time"]) == "2023-01-01 00:00:00+00:00"
+    with pytest.raises(ValueError, match="run 'r' has 4 spans"):
+        summarize_run(table, max_spans=3)
