@@ -3,9 +3,19 @@
 Reproduces the reference's execution semantics (wrappers.py:237-497)
 without Ray: ``@task`` wraps a Python function into a DAG node; calling
 nodes on each other's outputs composes the DAG; ``run_dag`` executes it
-on a thread pool with CPU-slot queueing, upstream-failure short-circuit,
-timeout guards and no retries, while every event is emitted as spans to
-an append-only JSONL log (the same shape ``spanlog.sources`` ingests).
+with CPU-slot queueing, upstream-failure short-circuit, timeout guards
+and no retries, while every event is emitted as spans to an append-only
+JSONL log (the same shape ``spanlog.sources`` ingests).
+
+``run_dag`` is one dispatch loop on the calling thread, the way Ray
+starts a task once its dependencies are done and its CPUs are free
+(Moritz et al., OSDI'18). The loop owns every piece of scheduling state:
+a count of unfinished upstream nodes per node, a FIFO of ready nodes and
+the number of free CPU slots. It hands a ready node that fits to a pool
+of ``max_cpus`` workers and waits for the first to finish, so no worker
+ever blocks on an upstream node and a waiting node never holds up an
+independent one. Each task writes its spans in one append when its body
+is done; its slots come back only after that.
 
 Semantics preserved from the reference (SURVEY §7 "quirks"):
 - task parameter keys must be prefixed ``task.``/``workflow.`` is
@@ -28,15 +38,23 @@ driver→executors, matching BASELINE.json's "Spark as execution backend".
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
+import inspect
+import json
+import multiprocessing as mp
+import os
+import tempfile
 import threading
 import traceback
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from collections import deque
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from multiprocessing import connection as mp_connection
 from pathlib import Path
 from typing import Any, Callable, Generic, Optional, TypeVar
 
-from ..spanlog.codec import SerializedData
 from ..spanlog.schema import (
     SPAN_ARTEFACT,
     SPAN_CALL_FUNCTION,
@@ -45,12 +63,18 @@ from ..spanlog.schema import (
     SPAN_NAMED_VALUE,
     SPAN_TASK_DEPENDENCY,
     SPAN_TIMEOUT_GUARD,
+    data_span,
     iso8601,
+    new_span_id,
     span_row,
 )
 from ..spanlog.writer import SpanWriter
 
 T = TypeVar("T")
+
+
+def _now() -> datetime.datetime:
+    return datetime.datetime.now(datetime.timezone.utc)
 
 
 # --------------------------------------------------------------------------
@@ -202,6 +226,8 @@ def task(
         params[k if k.startswith(("task.", "workflow.")) else f"task.{k}"] = v
     if timeout_s is not None and timeout_s <= 0:
         raise ValueError("timeout_s must be positive (or None for no timeout)")
+    if num_cpus < 0:
+        raise ValueError(f"num_cpus must be at least 0, got {num_cpus}")
     if executor not in ("thread", "process"):
         raise ValueError("executor must be 'thread' or 'process'")
 
@@ -231,29 +257,6 @@ def task(
     return deco
 
 
-# --------------------------------------------------------------------------
-class _CpuSlots:
-    """CPU-budget queueing (D11): tasks block until slots free."""
-
-    def __init__(self, total: int):
-        self.total = total
-        self.available = total
-        self.cv = threading.Condition()
-
-    def acquire(self, n: int) -> None:
-        n = min(n, self.total)
-        with self.cv:
-            while self.available < n:
-                self.cv.wait()
-            self.available -= n
-
-    def release(self, n: int) -> None:
-        n = min(n, self.total)
-        with self.cv:
-            self.available += n
-            self.cv.notify_all()
-
-
 def _collect_nodes(sinks: list[Node]) -> list[Node]:
     """Topological order over the DAG reachable from the sink nodes."""
     order: list[Node] = []
@@ -272,147 +275,97 @@ def _collect_nodes(sinks: list[Node]) -> list[Node]:
     return order
 
 
-def _process_child_main(fn, args, parameters, conn, data_path, traceparent=None) -> None:
+_TIMEOUT_MESSAGE = "Timeout error: execution did not finish within timeout limit"
+
+
+def _outcome(call: Callable[[], Any]) -> tuple[Optional[BaseException], Any]:
+    """``(error, value)`` of ``call()``; the error is reported, not raised."""
+    try:
+        return None, call()
+    except BaseException as e:  # noqa: BLE001 — reported, not hidden
+        return e, None
+
+
+def _process_child_main(fn, args, ctx: TaskContext, make_span, conn, data_path) -> None:
     """Entry point of a process-executor task body (fork child).
 
-    Each logged value/artefact is written DURABLY (append + flush +
-    fsync) to ``data_path`` before ``log_value`` returns, so a later
-    SIGKILL cannot lose it — the reference retains values logged before
-    a failure (test_task_opentelemetry_logging.py:245-283), and pipe
-    streaming raced the kill under load. The pipe carries only the one
-    terminal ("ok", value) / ("err", type, str, traceback) message.
+    Each logged value/artefact is written DURABLY, as its finished span
+    (append + flush + fsync), to ``data_path`` before ``log_value``
+    returns, so a later SIGKILL cannot lose it — the reference retains
+    values logged before a failure (test_task_opentelemetry_logging.py:
+    245-283). The pipe carries only the one terminal ("ok", value) /
+    ("err", message) result.
     """
-    import json as _json
-    import os as _os
 
-    def _emit(span_name: str, name: str, value: Any) -> None:
-        sd = SerializedData.encode(value)
-        rec = {
-            "t": iso8601(datetime.datetime.now(datetime.timezone.utc)),
-            "span_name": span_name,
-            "name": name,
-            "type": sd.type,
-            "encoding": sd.encoding,
-            "content_encoded": sd.encoded_content,
-        }
+    def log(span_name: str, name: str, value: Any) -> None:
+        line = json.dumps(make_span(span_name, name, value), separators=(",", ":"))
         with open(data_path, "a", encoding="utf-8") as f:
-            f.write(_json.dumps(rec, separators=(",", ":")) + "\n")
+            f.write(line + "\n")
             f.flush()
-            _os.fsync(f.fileno())
+            os.fsync(f.fileno())
 
-    _context_local.ctx = TaskContext(
-        parameters=parameters, _emit=_emit, traceparent=traceparent
-    )
+    _context_local.ctx = dataclasses.replace(ctx, _emit=log)
     try:
-        value = fn(*args)
-        try:
-            conn.send(("ok", value))
-        except Exception as e:  # unpicklable return value
-            conn.send(("err", type(e).__name__, str(e), traceback.format_exc()))
-    except BaseException as e:  # noqa: BLE001 — reported, not hidden
-        conn.send(
-            ("err", type(e).__name__, str(e), "".join(traceback.format_exception(e)))
-        )
+        error, value = _outcome(lambda: fn(*args))
+        if error is None:
+            try:
+                conn.send(("ok", value))
+            except Exception as e:  # unpicklable return value
+                error = e
+        if error is not None:
+            conn.send(("err", str(error)))
     finally:
         conn.close()
 
 
 def _run_body_in_process(
-    fn, args, parameters, timeout_s: Optional[float], on_data, traceparent=None
-) -> tuple[Optional[BaseException], Any]:
+    fn, args, ctx: TaskContext, timeout_s: Optional[float], make_span
+) -> tuple[Optional[BaseException], Any, list[dict]]:
     """D6 hard-kill path: run the body in a forked child; timeout =
     SIGKILL of the child (the analogue of the reference's ray.kill on the
     ExecActor, wrappers.py:126-193) — a CPU-spinning body demonstrably
-    stops consuming resources, unlike the abandoned-thread default.
+    stops consuming resources, unlike an abandoned thread.
 
-    Logged values arrive via the child's durable side file (see
-    ``_process_child_main``), read back AFTER the child exits — there is
-    no streaming to race the kill; anything the child fsync'd before the
-    SIGKILL is retained.
+    Returns ``(error, value, logged spans)``. The spans come from the
+    child's durable side file (see ``_process_child_main``), read back
+    AFTER the child exits, so anything it fsync'd before a SIGKILL is
+    retained. A child that dies without reporting fails the task.
     """
-    import json as _json
-    import multiprocessing as mp
-    import os as _os
-    import tempfile
-    import time as _time
-
     ctx_mp = mp.get_context("fork")  # fork: fn/args need not be picklable
     parent_conn, child_conn = ctx_mp.Pipe(duplex=False)
     fd, data_path = tempfile.mkstemp(prefix="task-data-", suffix=".jsonl")
-    _os.close(fd)
+    os.close(fd)
     proc = ctx_mp.Process(
         target=_process_child_main,
-        args=(fn, args, parameters, child_conn, data_path, traceparent),
+        args=(fn, args, ctx, make_span, child_conn, data_path),
         daemon=True,
     )
     proc.start()
     child_conn.close()
-
-    deadline = None if timeout_s is None else _time.monotonic() + timeout_s
-    error: Optional[BaseException] = None
-    value: Any = None
-    terminal = False
-    while not terminal:
-        wait = 0.5 if deadline is None else max(0.0, deadline - _time.monotonic())
-        if deadline is not None and wait == 0.0:
-            error = Exception(
-                "Timeout error: execution did not finish within timeout limit"
-            )
-            proc.kill()
-            break
-        try:
-            if not parent_conn.poll(min(wait, 0.5) if deadline is not None else 0.5):
-                if not proc.is_alive() and not parent_conn.poll(0):
-                    error = Exception("task process died without reporting a result")
-                    break
-                continue
-            msg = parent_conn.recv()
-        except EOFError:
-            error = Exception("task process died without reporting a result")
-            break
-        if msg[0] == "ok":
-            value = msg[1]
-            terminal = True
-        else:  # ("err", type_name, str, traceback)
-            error = Exception(msg[2])
-            terminal = True
-    proc.join(timeout=5)
-    parent_conn.close()
-    # replay the durable value log in order; a SIGKILL mid-write can
-    # leave one partial trailing line — skip unparseable lines
     try:
-        with open(data_path, encoding="utf-8") as f:
-            for line in f:
-                try:
-                    rec = _json.loads(line)
-                except ValueError:
-                    continue
-                on_data(
-                    rec["span_name"],
-                    rec["name"],
-                    rec["type"],
-                    rec["encoding"],
-                    rec["content_encoded"],
-                    datetime.datetime.fromisoformat(rec["t"]),
-                )
+        if not mp_connection.wait([parent_conn, proc.sentinel], timeout_s):
+            proc.kill()
+            msg = ("err", _TIMEOUT_MESSAGE)
+        else:
+            try:  # a dead child's pipe reads EOF once its result is drained
+                msg = parent_conn.recv()
+            except EOFError:
+                msg = ("err", "task process died without reporting a result")
+        proc.join(timeout=5)
     finally:
-        try:
-            _os.unlink(data_path)
-        except OSError:
-            pass
-    return error, value
-
-
-def _new_trace_id() -> str:
-    import uuid
-
-    return "0x" + uuid.uuid4().hex
-
-
-def _new_span_id() -> str:
-    import uuid
-
-    return "0x" + uuid.uuid4().hex[:16]
+        parent_conn.close()
+    # a SIGKILL mid-write can leave one partial trailing line: skip it
+    spans = []
+    with open(data_path, encoding="utf-8") as f:
+        for line in f:
+            try:
+                spans.append(json.loads(line))
+            except ValueError:
+                continue
+    os.unlink(data_path)
+    if msg[0] == "ok":
+        return None, msg[1], spans
+    return Exception(msg[1]), None, spans
 
 
 def run_dag(
@@ -422,34 +375,166 @@ def run_dag(
     max_cpus: int = 8,
     spark: Any = None,
 ) -> Try[list]:
-    """Execute a DAG (D3): topological submission on a thread pool with
-    CPU-slot queueing; returns Success([sink results]) or
+    """Execute a DAG (D3); returns Success([sink results]) or
     Failure(ExceptionGroup_). All events land as spans in ``log_dir``.
+
+    One dispatch loop on the calling thread starts each node, in FIFO
+    order, once its upstream nodes are done and ``min(num_cpus,
+    max_cpus)`` of the ``max_cpus`` slots are free (D11); bodies run on
+    a pool of ``max_cpus`` workers.
 
     ``spark``: optional SparkSession; if the task fn's first positional
     parameter is named ``spark`` it is injected (the execution-backend
     hook — task bodies run DataFrame jobs on the shared session).
     """
+    if max_cpus < 1:
+        raise ValueError(f"max_cpus must be at least 1, got {max_cpus}")
     sinks = dag if isinstance(dag, list) else [dag]
     nodes = _collect_nodes(sinks)
     writer = SpanWriter(log_dir)
-    trace_id = _new_trace_id()
-    top_span_id = _new_span_id()
+    trace_id = "0x" + uuid.uuid4().hex
+    top_span_id = new_span_id()
     wf_params = {
         (k if k.startswith("workflow.") else f"workflow.{k}"): v
         for k, v in (workflow_parameters or {}).items()
     }
-    top_start = datetime.datetime.now(datetime.timezone.utc)
-    slots = _CpuSlots(max_cpus)
-
-    def emit(span: dict) -> None:
-        writer.write(span)
+    top_start = _now()
 
     def run_node(n: Node) -> Try:
-        # wait for upstream (futures already resolved by topo submission)
-        upstream_results = [u._result for u in n.upstream]
-        failures = [r for r in upstream_results if r is not None and r.is_failure()]
-        task_span_id = _new_span_id()
+        """Run one node's body on a pool worker and write all its spans in
+        one append. The dispatch loop frees the node's slots only after
+        this returns, so the log never shows more than max_cpus in use."""
+        # the execute-task span opens once the node holds its slots:
+        # queueing wait is not task runtime (matches the reference, where
+        # Ray schedules before the task span starts — test_task_queuing.py)
+        start = _now()
+        task_span_id, guard_span_id, call_span_id = new_span_id(), new_span_id(), new_span_id()
+        upstream_ids = [u._task_result.span_id for u in n.upstream]
+        args = [u._task_result.result for u in n.upstream]
+        data: list[dict] = []  # logged values/artefacts (kept on failure)
+
+        def make_span(span_name: str, name: str, value: Any) -> dict:
+            return data_span(span_name, name, value, trace_id, call_span_id)
+
+        ctx = TaskContext(
+            parameters={**wf_params, **n.parameters},
+            _emit=lambda *a: data.append(make_span(*a)),
+            # the task span's W3C traceparent (ids are "0x"-prefixed hex)
+            traceparent=f"00-{trace_id[2:]}-{task_span_id[2:]}-01",
+        )
+        first = next(iter(inspect.signature(n.fn).parameters.values()), None)
+        wants_spark = first is not None and first.name == "spark"
+        job_group = f"task-{task_span_id}"
+
+        def body():
+            _context_local.ctx = ctx
+            try:
+                if spark is not None:
+                    # D6: tag this task's Spark jobs so a timeout can
+                    # cancel them (interruptOnCancel kills executor tasks)
+                    spark.sparkContext.setJobGroup(
+                        job_group, f"task {n.task_id}", interruptOnCancel=True
+                    )
+                    if wants_spark:
+                        return n.fn(spark, *args)
+                return n.fn(*args)
+            finally:
+                _context_local.ctx = None
+
+        call_start = _now()
+        if n.executor == "process":
+            # D6 hard-kill option (reference parity: ray.kill on the
+            # ExecActor). The shared SparkSession cannot cross the fork,
+            # so this path is for pure-Python bodies (the ones that spin).
+            if wants_spark:
+                error, value = ValueError(
+                    "executor='process' tasks cannot take the shared "
+                    "SparkSession; use the default thread executor"
+                ), None
+            else:
+                error, value, logged = _run_body_in_process(
+                    n.fn, args, ctx, n.timeout_s, make_span
+                )
+                data.extend(logged)
+        elif n.timeout_s is None:
+            error, value = _outcome(body)
+        else:
+            # D6: timeout guard. Python threads cannot be killed: the body
+            # runs on a daemon thread that is abandoned if it overruns, and
+            # a daemon thread does not hold up interpreter exit (use
+            # executor='process' for a hard kill).
+            box: list = []
+            t = threading.Thread(target=lambda: box.append(_outcome(body)), daemon=True)
+            t.start()
+            t.join(n.timeout_s)
+            if box:
+                error, value = box[0]
+            else:
+                error, value = Exception(_TIMEOUT_MESSAGE), None
+                if spark is not None:
+                    # kill the task's in-flight Spark jobs (the reference
+                    # kills its Ray actor here, wrappers.py:126-193)
+                    try:
+                        spark.sparkContext.cancelJobGroup(job_group)
+                    except Exception:
+                        pass
+        call_end = _now()
+
+        status = ("ERROR", "Failure") if error is not None else ("OK", None)
+        events = []
+        if error is not None:
+            events = [
+                {
+                    "name": "exception",
+                    "timestamp": iso8601(call_end),
+                    "attributes": {
+                        "exception.type": type(error).__name__,
+                        "exception.message": str(error),
+                        "exception.stacktrace": "".join(traceback.format_exception(error)),
+                        "exception.escaped": "false",
+                    },
+                }
+            ]
+        # nested guard/call spans (wrappers.py:161-170 structure), the
+        # logged values (snapshot: an abandoned body thread may still be
+        # appending), then the legacy task-dependency spans (D7,
+        # wrappers.py:335-340) and the task span itself
+        spans = [
+            span_row(
+                span_id=call_span_id,
+                name=SPAN_CALL_FUNCTION,
+                start_time=call_start,
+                end_time=call_end,
+                trace_id=trace_id,
+                parent_id=guard_span_id,
+                status_code=status[0],
+                status_description=status[1],
+                events=events,
+            ),
+            span_row(
+                span_id=guard_span_id,
+                name=SPAN_TIMEOUT_GUARD,
+                start_time=call_start,
+                end_time=call_end,
+                trace_id=trace_id,
+                parent_id=task_span_id,
+                status_code=status[0],
+                status_description=status[1],
+            ),
+            *data,
+        ]
+        for u in upstream_ids:
+            spans.append(
+                span_row(
+                    span_id=new_span_id(),
+                    name=SPAN_TASK_DEPENDENCY,
+                    start_time=start,
+                    end_time=start,
+                    trace_id=trace_id,
+                    parent_id=task_span_id,
+                    attributes={"from_task_span_id": u, "to_task_span_id": task_span_id},
+                )
+            )
         attrs: dict[str, Any] = {
             "task.id": n.task_id,
             "task.type": "python",
@@ -460,271 +545,82 @@ def run_dag(
         }
         links = [
             {
-                "context": {"trace_id": trace_id, "span_id": u._task_result.span_id},
+                "context": {"trace_id": trace_id, "span_id": u},
                 "attributes": {"type": "task-dependency"},
             }
-            for u in n.upstream
-            if u._task_result is not None
+            for u in upstream_ids
         ]
-
-        if failures:
-            # D4: short-circuit — body never runs, no execute-task span
-            # is recorded for this node (the reference's skipped task
-            # emits nothing of substance); flatten upstream errors.
-            group = ExceptionGroup_([f.error for f in failures])
-            return Failure(group)
-
-        slots.acquire(n.num_cpus)
-        # everything between acquire and the finally-release is guarded:
-        # if span emission or result handling raises (e.g. disk full), the
-        # CPU slots must not leak or later tasks block forever in acquire
-        try:
-            # the execute-task span opens AFTER slot acquisition: queueing
-            # wait is not task runtime (matches the reference, where Ray
-            # schedules before the task span starts — test_task_queuing.py)
-            start = datetime.datetime.now(datetime.timezone.utc)
-            child_spans: list[dict] = []
-            guard_span_id = _new_span_id()
-            call_span_id = _new_span_id()
-
-            def append_data_span(
-                span_name: str,
-                name: str,
-                sd_type: str,
-                sd_enc: str,
-                sd_content,
-                at: Optional[datetime.datetime] = None,
-            ) -> None:
-                # `at`: log-time timestamp from the process executor's
-                # durable side file (keeps last-value-wins ordering exact)
-                now = at or datetime.datetime.now(datetime.timezone.utc)
-                child_spans.append(
-                    span_row(
-                        span_id=_new_span_id(),
-                        name=span_name,
-                        start_time=now,
-                        end_time=now,
-                        trace_id=trace_id,
-                        parent_id=call_span_id,
-                        attributes={
-                            "name": name,
-                            "type": sd_type,
-                            "encoding": sd_enc,
-                            "content_encoded": sd_content,
-                        },
-                    )
-                )
-
-            def emit_data_span(span_name: str, name: str, value: Any) -> None:
-                sd = SerializedData.encode(value)
-                append_data_span(span_name, name, sd.type, sd.encoding, sd.encoded_content)
-
-            # the task span's W3C traceparent (ids are "0x"-prefixed hex)
-            task_traceparent = f"00-{trace_id[2:]}-{task_span_id[2:]}-01"
-            ctx = TaskContext(
-                parameters={**wf_params, **n.parameters},
-                _emit=emit_data_span,
-                traceparent=task_traceparent,
+        spans.append(
+            span_row(
+                span_id=task_span_id,
+                name=SPAN_EXECUTE_TASK,
+                start_time=start,
+                end_time=_now(),
+                trace_id=trace_id,
+                parent_id=top_span_id,
+                status_code=status[0],
+                status_description=status[1],
+                attributes=attrs,
+                links=links,
             )
-
-            job_group = f"task-{task_span_id}"
-
-            def body():
-                _context_local.ctx = ctx
-                try:
-                    args = [u._task_result.result for u in n.upstream]
-                    if spark is not None:
-                        # D6: tag this task's Spark jobs so a timeout can
-                        # cancel them (interruptOnCancel kills executor tasks)
-                        spark.sparkContext.setJobGroup(
-                            job_group, f"task {n.task_id}", interruptOnCancel=True
-                        )
-                        import inspect
-
-                        sig = inspect.signature(n.fn)
-                        first = next(iter(sig.parameters.values()), None)
-                        if first is not None and first.name == "spark":
-                            return n.fn(spark, *args)
-                    return n.fn(*args)
-                finally:
-                    _context_local.ctx = None
-
-            error: Optional[BaseException] = None
-            value: Any = None
-            call_start = datetime.datetime.now(datetime.timezone.utc)
-            if n.executor == "process":
-                # D6 hard-kill option: body runs in a forked child; timeout
-                # = SIGKILL (reference parity: ray.kill on the ExecActor).
-                # The shared SparkSession cannot cross the fork, so this
-                # path is for pure-Python bodies (the ones that can spin).
-                import inspect
-
-                first = next(iter(inspect.signature(n.fn).parameters.values()), None)
-                if first is not None and first.name == "spark":
-                    error = ValueError(
-                        "executor='process' tasks cannot take the shared "
-                        "SparkSession; use the default thread executor"
-                    )
-                else:
-                    error, value = _run_body_in_process(
-                        n.fn,
-                        [u._task_result.result for u in n.upstream],
-                        {**wf_params, **n.parameters},
-                        n.timeout_s,
-                        append_data_span,
-                        traceparent=task_traceparent,
-                    )
-            elif n.timeout_s is None:
-                try:
-                    value = body()
-                except BaseException as e:  # noqa: BLE001 — reported, not hidden
-                    error = e
-            else:
-                # D6: timeout guard. Python threads cannot be killed; the
-                # body thread is abandoned on timeout (use
-                # executor='process' for a hard kill). Spark jobs started
-                # by the body are cancelled via the job group.
-                guard_pool = ThreadPoolExecutor(max_workers=1)
-                fut = guard_pool.submit(body)
-                try:
-                    value = fut.result(timeout=n.timeout_s)
-                except TimeoutError:
-                    error = Exception(
-                        "Timeout error: execution did not finish within timeout limit"
-                    )
-                    fut.cancel()
-                    if spark is not None:
-                        # kill the task's in-flight Spark jobs (the reference
-                        # kills its Ray actor here, wrappers.py:126-193); the
-                        # Python wrapper thread is abandoned
-                        try:
-                            spark.sparkContext.cancelJobGroup(job_group)
-                        except Exception:
-                            pass
-                except BaseException as e:  # noqa: BLE001
-                    error = e
-                finally:
-                    # do NOT join the (possibly still running) body thread —
-                    # the reference kills its Ray actor here; we abandon the
-                    # thread and return the timeout Failure immediately
-                    guard_pool.shutdown(wait=False)
-            call_end = datetime.datetime.now(datetime.timezone.utc)
-
-            status = ("ERROR", "Failure") if error is not None else ("OK", None)
-            events = []
-            if error is not None:
-                events = [
-                    {
-                        "name": "exception",
-                        "timestamp": iso8601(call_end),
-                        "attributes": {
-                            "exception.type": type(error).__name__,
-                            "exception.message": str(error),
-                            "exception.stacktrace": "".join(
-                                traceback.format_exception(error)
-                            ),
-                            "exception.escaped": "false",
-                        },
-                    }
-                ]
-
-            # nested guard/call spans (wrappers.py:161-170 structure)
-            emit(
-                span_row(
-                    span_id=call_span_id,
-                    name=SPAN_CALL_FUNCTION,
-                    start_time=call_start,
-                    end_time=call_end,
-                    trace_id=trace_id,
-                    parent_id=guard_span_id,
-                    status_code=status[0],
-                    status_description=status[1],
-                    events=events,
-                )
-            )
-            emit(
-                span_row(
-                    span_id=guard_span_id,
-                    name=SPAN_TIMEOUT_GUARD,
-                    start_time=call_start,
-                    end_time=call_end,
-                    trace_id=trace_id,
-                    parent_id=task_span_id,
-                    status_code=status[0],
-                    status_description=status[1],
-                )
-            )
-            # snapshot: after a timeout the abandoned body thread may still
-            # be appending while we iterate
-            for sp in list(child_spans):  # logged values/artifacts (kept on failure)
-                emit(sp)
-            # legacy task-dependency spans (D7, wrappers.py:335-340)
-            for u in n.upstream:
-                if u._task_result is not None:
-                    emit(
-                        span_row(
-                            span_id=_new_span_id(),
-                            name=SPAN_TASK_DEPENDENCY,
-                            start_time=start,
-                            end_time=start,
-                            trace_id=trace_id,
-                            parent_id=task_span_id,
-                            attributes={
-                                "from_task_span_id": u._task_result.span_id,
-                                "to_task_span_id": task_span_id,
-                            },
-                        )
-                    )
-            end = datetime.datetime.now(datetime.timezone.utc)
-            emit(
-                span_row(
-                    span_id=task_span_id,
-                    name=SPAN_EXECUTE_TASK,
-                    start_time=start,
-                    end_time=end,
-                    trace_id=trace_id,
-                    parent_id=top_span_id,
-                    status_code=status[0],
-                    status_description=status[1],
-                    attributes=attrs,
-                    links=links,
-                )
-            )
-        finally:
-            # release only after the span's end timestamp is recorded — else
-            # a queued task can start inside this span's [start, end] window
-            # and the log would show more than max_cpus concurrent tasks
-            slots.release(n.num_cpus)
+        )
+        writer.write_many(spans)
 
         n._task_result = TaskResult(result=value, span_id=task_span_id)
-        if error is not None:
-            return Failure(error if isinstance(error, ExceptionGroup_) else ExceptionGroup_([error]))
-        return Success(value)
+        if error is None:
+            return Success(value)
+        return Failure(error if isinstance(error, ExceptionGroup_) else ExceptionGroup_([error]))
 
-    # topo execution with parallelism: submit a node once all upstream done
-    with ThreadPoolExecutor(max_workers=max(4, max_cpus)) as pool:
-        futures: dict[int, Any] = {}
+    # the dispatch loop: unfinished-upstream counts, a FIFO of ready
+    # nodes and the free slot count, all owned by this thread
+    pending = {id(n): len(n.upstream) for n in nodes}
+    children: dict[int, list[Node]] = {id(n): [] for n in nodes}
+    for n in nodes:
+        for u in n.upstream:
+            children[id(u)].append(n)
+    ready = deque(n for n in nodes if not n.upstream)
+    free = max_cpus
+    running: dict[Future, Node] = {}
 
-        def schedule(n: Node):
-            for u in n.upstream:
-                futures[id(u)].result()  # wait upstream completion
-            # assign _result HERE (not after the pool drains): downstream
-            # nodes read it for failure short-circuit
-            n._result = run_node(n)
-            return n._result
+    def slots(n: Node) -> int:
+        return min(n.num_cpus, max_cpus)
 
-        for n in nodes:  # nodes are in topo order, so upstream submitted first
-            futures[id(n)] = pool.submit(schedule, n)
-        for n in nodes:
-            n._result = futures[id(n)].result()
+    def settle(n: Node, result: Try) -> None:
+        """Record ``n``'s result and queue each child whose upstream is now
+        done. D4: a child with a failed upstream never runs its body, takes
+        no slot and writes no span; its upstream errors flatten into one
+        group, and it settles at once."""
+        todo = [(n, result)]
+        while todo:
+            n, result = todo.pop()
+            n._result = result
+            for c in children[id(n)]:
+                pending[id(c)] -= 1
+                if pending[id(c)] == 0:
+                    failures = [u._result.error for u in c.upstream if u._result.is_failure()]
+                    if failures:
+                        todo.append((c, Failure(ExceptionGroup_(failures))))
+                    else:
+                        ready.append(c)
 
-    top_end = datetime.datetime.now(datetime.timezone.utc)
-    emit(
+    with ThreadPoolExecutor(max_workers=max_cpus) as pool:
+        while ready or running:
+            while ready and slots(ready[0]) <= free:
+                n = ready.popleft()
+                free -= slots(n)
+                running[pool.submit(run_node, n)] = n
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                n = running.pop(fut)
+                free += slots(n)
+                settle(n, fut.result())
+
+    writer.write(
         span_row(
             span_id=top_span_id,
             name=SPAN_DAG_TOP,
             start_time=top_start,
-            end_time=top_end,
+            end_time=_now(),
             trace_id=trace_id,
             attributes=wf_params,
         )

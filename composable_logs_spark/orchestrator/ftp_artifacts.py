@@ -21,20 +21,13 @@ reference's FTP actor.
 
 from __future__ import annotations
 
-import datetime
 import posixpath
 import socket
 import socketserver
 import threading
-import uuid
 
-from ..spanlog.codec import SerializedData
-from ..spanlog.schema import SPAN_ARTEFACT, span_row
+from ..spanlog.schema import SPAN_ARTEFACT, data_span
 from ..spanlog.writer import SpanWriter
-
-
-def _now():
-    return datetime.datetime.now(datetime.timezone.utc)
 
 
 class _FtpHandler(socketserver.StreamRequestHandler):
@@ -158,23 +151,8 @@ class FtpArtifactServer(socketserver.ThreadingTCPServer):
     def store(self, trace_id, parent_span, name: str, content: bytes) -> None:
         with self._lock:
             self.files[name] = content
-        sd = SerializedData.encode(content)
-        now = _now()
         self.writer.write(
-            span_row(
-                span_id="0x" + uuid.uuid4().hex[:16],
-                name=SPAN_ARTEFACT,
-                start_time=now,
-                end_time=now,
-                trace_id=trace_id or ("0x" + "0" * 32),
-                parent_id=parent_span,
-                attributes={
-                    "name": name,
-                    "type": sd.type,
-                    "encoding": sd.encoding,
-                    "content_encoded": sd.encoded_content,
-                },
-            )
+            data_span(SPAN_ARTEFACT, name, content, trace_id or ("0x" + "0" * 32), parent_span)
         )
 
     def __enter__(self) -> "FtpArtifactServer":

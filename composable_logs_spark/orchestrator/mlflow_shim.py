@@ -23,19 +23,12 @@ work unmodified.
 
 from __future__ import annotations
 
-import base64
-import datetime
 import threading
 import uuid
-from typing import Any, Optional
+from typing import Any
 
-from ..spanlog.codec import SerializedData
-from ..spanlog.schema import SPAN_ARTEFACT, SPAN_NAMED_VALUE, span_row
+from ..spanlog.schema import SPAN_ARTEFACT, SPAN_NAMED_VALUE, data_span
 from ..spanlog.writer import SpanWriter
-
-
-def _now():
-    return datetime.datetime.now(datetime.timezone.utc)
 
 
 class _ShimState:
@@ -64,24 +57,7 @@ class _ShimState:
 
     def log(self, run_id: str, span_name: str, name: str, value: Any) -> None:
         run = self.runs[run_id]
-        sd = SerializedData.encode(value)
-        now = _now()
-        self.writer.write(
-            span_row(
-                span_id="0x" + uuid.uuid4().hex[:16],
-                name=span_name,
-                start_time=now,
-                end_time=now,
-                trace_id=run["trace_id"],
-                parent_id=run["parent"],
-                attributes={
-                    "name": name,
-                    "type": sd.type,
-                    "encoding": sd.encoding,
-                    "content_encoded": sd.encoded_content,
-                },
-            )
-        )
+        self.writer.write(data_span(span_name, name, value, run["trace_id"], run["parent"]))
 
 
 class NestedRunError(Exception):

@@ -7,8 +7,9 @@ an optional local cache to avoid refetching.
 
 This is a driver-side connector (network I/O, not a Spark op): blobs land
 in a cache/landing directory and the Spark side ingests them with
-``spanlog.sources.read_spans_from_zip`` (distributed unzip). The fetcher
-is injectable so tests run without network.
+``spanlog.sources.read_spans_from_zip``, which unzips them on the driver
+and hands the spans to Spark. The fetcher is injectable so tests run
+without network.
 """
 
 from __future__ import annotations

@@ -18,10 +18,13 @@ task_opentelemetry_logging.py:222-226).
 from __future__ import annotations
 
 import datetime
+import uuid
 from collections.abc import Mapping, Sequence
 from typing import Any
 
 from pyspark.sql import types as T
+
+from .codec import SerializedData
 
 # Attribute values in OTel are str/int/float/bool; the reference validates
 # this (opentelemetry_task_span_parser.py:231-233). We store them as
@@ -164,6 +167,36 @@ def span_row(
         "events": events or [],
         "links": links or [],
     }
+
+
+def new_span_id() -> str:
+    """A random 64-bit span id, ``0x``-prefixed hex like every id in the log."""
+    return "0x" + uuid.uuid4().hex[:16]
+
+
+def data_span(
+    span_name: str, name: str, value: Any, trace_id: str, parent_id: str | None
+) -> dict[str, Any]:
+    """One ``named-value``/``artefact`` span logged now: ``value`` encoded
+    by ``SerializedData`` into the F4 attributes ``name``/``type``/
+    ``encoding``/``content_encoded`` (reference:
+    task_opentelemetry_logging.py:222-226)."""
+    sd = SerializedData.encode(value)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    return span_row(
+        span_id=new_span_id(),
+        name=span_name,
+        start_time=now,
+        end_time=now,
+        trace_id=trace_id,
+        parent_id=parent_id,
+        attributes={
+            "name": name,
+            "type": sd.type,
+            "encoding": sd.encoding,
+            "content_encoded": sd.encoded_content,
+        },
+    )
 
 
 def _attr_str(v: Any) -> str:

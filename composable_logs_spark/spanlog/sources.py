@@ -56,26 +56,11 @@ def spans_from_zip_bytes(zip_bytes: bytes, member: str = SPANS_ZIP_MEMBER) -> li
 
 
 def read_spans_from_zip(
-    spark: SparkSession, zips: Iterable[bytes] | str | Path, member: str = SPANS_ZIP_MEMBER
+    spark: SparkSession, zips: Iterable[bytes], member: str = SPANS_ZIP_MEMBER
 ) -> DataFrame:
-    """S3: spans from zip archives.
-
-    Accepts either an iterable of zip byte-blobs (the reference's shape) or
-    a path/glob of ``*.zip`` files. The path form reads via Spark's
-    ``binaryFile`` source so the unzip runs distributed on executors —
-    at 100 TB the zips never pass through the driver.
-    """
-    if isinstance(zips, (str, Path)):
-        bin_df = spark.read.format("binaryFile").load(str(zips))
-
-        def unzip_partition(rows):
-            for row in rows:
-                for span in spans_from_zip_bytes(bytes(row.content), member):
-                    yield json.dumps(span)
-
-        rdd = bin_df.select("content").rdd.mapPartitions(unzip_partition)
-        return spark.read.schema(SPAN_SCHEMA).json(rdd)
-
+    """S3: spans from zip archives given as byte blobs (the reference's
+    shape). The blobs are unzipped on the driver, which already holds
+    them, and the spans handed to Spark as JSON lines."""
     all_spans: list[str] = []
     for blob in zips:
         all_spans.extend(json.dumps(s) for s in spans_from_zip_bytes(blob, member))

@@ -3,8 +3,10 @@
 The reference relies on Ray's tracing startup hook to land spans as JSONL
 under /tmp/spans (reference: conftest.py:12-20, spans read back at
 opentelemetry_helpers.py:499-500). Our orchestrator writes the same shape
-directly: one JSON object per line, one file per process, append-only —
-exactly the layout Structured Streaming's file source tails incrementally.
+directly: one JSON object per line, one file per ``SpanWriter``,
+append-only — exactly the layout Structured Streaming's file source tails
+incrementally. ``run_dag`` appends each task's spans in one
+``write_many`` call, so the file is opened once per task, not per span.
 
 At scale the destination would be an object-store prefix (or a Delta
 table); the writer only assumes "append a line to a log file", which maps
@@ -35,10 +37,7 @@ class SpanWriter:
         return self._path
 
     def write(self, span: dict[str, Any]) -> None:
-        line = json.dumps(span, separators=(",", ":"), default=str)
-        with self._lock:
-            with open(self._path, "a", encoding="utf-8") as f:
-                f.write(line + "\n")
+        self.write_many([span])
 
     def write_many(self, spans: list[dict[str, Any]]) -> None:
         lines = "".join(

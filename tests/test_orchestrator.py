@@ -1,7 +1,13 @@
 """Ports of the reference's DAG-semantics tests (SURVEY §5) against the
 Spark-backed orchestrator: round-trip run → span log → summaries."""
 
+import datetime
+import json
+import random
+import subprocess
+import sys
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -180,6 +186,90 @@ def test_cpu_slot_queueing(spark, tmp_path):
         assert lo >= hi, f"3-way overlap: {a} {b} {c}"
 
 
+def test_independent_task_not_blocked_by_waiting_siblings(spark, tmp_path):
+    # three children wait on a slow task while 3 of 4 slots are free: a
+    # waiting node must not hold up the independent task
+    @task(task_id="slow")
+    def slow():
+        time.sleep(1)
+
+    @task(task_id="child")
+    def child(x):
+        return x
+
+    @task(task_id="free")
+    def free():
+        return 1
+
+    s = slow()
+    res = run_dag([child(s), child(s), child(s), free()], log_dir=tmp_path, max_cpus=4)
+    assert isinstance(res, Success)
+
+    rows = {r["task_id"]: r for r in _summarize(spark, tmp_path).task_runs.collect()}
+    assert rows["free"]["start_time"] < rows["slow"]["end_time"]
+
+
+def test_dispatch_stress_keeps_slot_bound_and_writes_every_span(tmp_path):
+    # more slots than cores and a short switch interval: every task runs
+    # once and writes all its spans, and no instant of the log shows more
+    # than max_cpus slots in use
+    rng = random.Random(0)
+
+    def body(*upstream):
+        time.sleep(0.001)
+        return 1
+
+    nodes = []
+    for i in range(120):
+        upstream = rng.sample(nodes, min(len(nodes), rng.randint(0, 2)))
+        nodes.append(task(task_id=f"t{i}", num_cpus=rng.randint(1, 3))(body)(*upstream))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        res = run_dag(nodes, log_dir=tmp_path, max_cpus=8)
+    finally:
+        sys.setswitchinterval(interval)
+    assert res.get() == [1] * 120
+
+    lines = [line for p in tmp_path.glob("*.jsonl") for line in p.read_text().splitlines()]
+    spans = [json.loads(line) for line in lines]
+    n_deps = sum(len(n.upstream) for n in nodes)
+    assert len(spans) == 3 * 120 + n_deps + 1
+    tasks = [s for s in spans if s["name"] == "execute-task"]
+    assert sorted(s["attributes"]["task.id"] for s in tasks) == sorted(f"t{i}" for i in range(120))
+    # sweep the execute-task intervals; a task ending at the instant
+    # another starts is not an overlap
+    events = sorted(
+        (datetime.datetime.fromisoformat(s[key]), sign * int(s["attributes"]["task.num_cpus"]))
+        for s in tasks
+        for key, sign in (("start_time", 1), ("end_time", -1))
+    )
+    in_use = 0
+    for _, delta in events:
+        in_use += delta
+        assert in_use <= 8
+
+
+def test_process_exits_promptly_after_a_timeout(tmp_path):
+    # the abandoned body of a timed-out thread task must not hold up
+    # interpreter exit
+    script = f"""
+import time
+from composable_logs_spark.orchestrator import Failure, run_dag, task
+
+@task(task_id="stuck", timeout_s=0.5)
+def stuck():
+    time.sleep(8)
+
+assert isinstance(run_dag(stuck(), log_dir={str(tmp_path)!r}), Failure)
+"""
+    t0 = time.time()
+    subprocess.run(
+        [sys.executable, "-c", script], cwd=Path(__file__).parents[1], check=True, timeout=30
+    )
+    assert time.time() - t0 < 4
+
+
 def test_values_retained_on_failure(spark, tmp_path):
     # reference test_task_opentelemetry_logging.py:245-283
     @task(task_id="partial")
@@ -196,13 +286,23 @@ def test_values_retained_on_failure(spark, tmp_path):
     assert vals[0]["value_long"] == 7
 
 
-def test_invalid_parameters_rejected():
+def test_invalid_parameters_rejected(tmp_path):
     # reference wrappers.py:250-260 prefix validation
     with pytest.raises(ValueError):
         task(task_id="bad", task_parameters={"other.x": 1})
 
     with pytest.raises(ValueError):
         task(task_id="bad", timeout_s=0)
+
+    with pytest.raises(ValueError, match="num_cpus"):
+        task(task_id="bad", num_cpus=-1)
+
+    @task(task_id="ok")
+    def ok():
+        return 1
+
+    with pytest.raises(ValueError, match="max_cpus"):
+        run_dag(ok(), log_dir=tmp_path, max_cpus=0)
 
 
 def test_kwargs_composition_rejected(tmp_path):
@@ -267,6 +367,28 @@ def test_process_executor_success_and_failure(spark, tmp_path):
     assert rows["boom"]["is_success"] is False
     lv = s.logged_values.collect()
     assert [(v["name"], v["value_long"]) for v in lv] == [("n", 7)]
+
+
+def test_process_executor_child_dies_without_result(spark, tmp_path):
+    # a child that exits without sending its result fails the task at
+    # once and keeps what it logged first
+    import os
+
+    @task(task_id="dies", executor="process")
+    def dies():
+        get_task_context().log_value("before_exit", 3)
+        os._exit(3)
+
+    t0 = time.time()
+    res = run_dag(dies(), log_dir=tmp_path)
+    assert time.time() - t0 < 5
+    assert isinstance(res, Failure)
+    assert "task process died without reporting a result" in str(res.error.exceptions[0])
+
+    s = _summarize(spark, tmp_path)
+    assert s.task_runs.collect()[0]["is_success"] is False
+    lv = s.logged_values.collect()
+    assert [(v["name"], v["value_long"]) for v in lv] == [("before_exit", 3)]
 
 
 def test_process_executor_rejects_spark_bodies(spark, tmp_path):
