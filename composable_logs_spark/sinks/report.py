@@ -13,6 +13,7 @@ Timestamps are naive UTC datetimes whatever the process's ``TZ``.
 from __future__ import annotations
 
 import datetime
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from ..plans.summarize import SpanSummary, nulls_first
@@ -50,7 +51,8 @@ def _value_of(v: dict):
 
 def _utc(ts: datetime.datetime | None) -> datetime.datetime | None:
     """``collect()`` gives a timestamp as a naive datetime in the process's
-    local zone (``fold`` set in a DST overlap); the same instant, naive UTC."""
+    local zone (``fold`` set in a DST overlap); the same instant, naive UTC.
+    An aware datetime converts the same way."""
     return None if ts is None else ts.astimezone(datetime.timezone.utc).replace(tzinfo=None)
 
 
@@ -68,27 +70,29 @@ def collect_report(source: SpanSummary | Report) -> Report:
     if isinstance(source, Report):
         return source
     if source._report is None:
-        runs = sorted(
-            (r.asDict(recursive=True) for r in source.runs.collect()),
-            key=lambda r: nulls_first(r["run_id"]),
-        )
-        report = Report([], [], {}, {}, {}, {})
-        for r in runs:
-            rid = r["run_id"]
-            for row in r["workflow_runs"] + r["task_runs"]:
-                row["start_time"], row["end_time"] = _utc(row["start_time"]), _utc(row["end_time"])
-            report.workflows += [{"run_id": rid, **w} for w in r["workflow_runs"]]
-            tasks = [{"run_id": rid, **t} for t in r["task_runs"]]
-            report.tasks += tasks
-            report.tasks_by_run[rid] = sorted(
-                tasks, key=lambda t: nulls_first(t["start_time"], t["span_id"])
-            )
-            report.deps_by_run[rid] = sorted(
-                ({"run_id": rid, **d} for d in r["deps"]),
-                key=lambda d: nulls_first(d["to_span_id"], d["from_span_id"]),
-            )
-            report.artifacts_by_task |= _by_task(rid, r["artifacts"])
-            report.values_by_task |= _by_task(rid, r["logged_values"])
-        report.tasks.sort(key=lambda t: nulls_first(t["start_time"], t["span_id"], t["run_id"]))
-        source._report = report
+        source._report = build_report(r.asDict(recursive=True) for r in source.runs.collect())
     return source._report
+
+
+def build_report(runs: Iterable[dict]) -> Report:
+    """The report of ``SpanSummary.runs`` rows given as dicts (maps as
+    dicts; timestamps naive local, as ``collect()`` gives them, or aware)."""
+    report = Report([], [], {}, {}, {}, {})
+    for r in sorted(runs, key=lambda r: nulls_first(r["run_id"])):
+        rid = r["run_id"]
+        for row in r["workflow_runs"] + r["task_runs"]:
+            row["start_time"], row["end_time"] = _utc(row["start_time"]), _utc(row["end_time"])
+        report.workflows += [{"run_id": rid, **w} for w in r["workflow_runs"]]
+        tasks = [{"run_id": rid, **t} for t in r["task_runs"]]
+        report.tasks += tasks
+        report.tasks_by_run[rid] = sorted(
+            tasks, key=lambda t: nulls_first(t["start_time"], t["span_id"])
+        )
+        report.deps_by_run[rid] = sorted(
+            ({"run_id": rid, **d} for d in r["deps"]),
+            key=lambda d: nulls_first(d["to_span_id"], d["from_span_id"]),
+        )
+        report.artifacts_by_task |= _by_task(rid, r["artifacts"])
+        report.values_by_task |= _by_task(rid, r["logged_values"])
+    report.tasks.sort(key=lambda t: nulls_first(t["start_time"], t["span_id"], t["run_id"]))
+    return report
