@@ -56,7 +56,8 @@ def pynb_log_parser(argv: list[str]) -> int:
     if args.output_filepath_mermaid_gantt is not None:
         out = args.output_filepath_mermaid_gantt
         out.parent.mkdir(parents=True, exist_ok=True)
-        out.write_text("\n".join(make_mermaid_gantt(report, rid) for rid in run_ids))
+        gantts = (make_mermaid_gantt(report, rid) for rid in run_ids)
+        out.write_text("\n".join(gantts), encoding="utf-8")
 
     if args.output_filepath_mermaid_dag is not None:
         out = args.output_filepath_mermaid_dag
@@ -67,7 +68,7 @@ def pynb_log_parser(argv: list[str]) -> int:
         nolinks = out.with_name(out.name.replace(".mmd", "-nolinks.mmd"))
         for path, links in ((out, True), (nolinks, False)):
             dags = (make_mermaid_dag(report, rid, generate_links=links) for rid in run_ids)
-            path.write_text("\n".join(dags))
+            path.write_text("\n".join(dags), encoding="utf-8")
 
     print(" - Done")
     return 0

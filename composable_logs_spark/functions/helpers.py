@@ -31,11 +31,6 @@ def range_is_empty(r: tuple[float, float] | None) -> bool:
     return r is None or r[0] >= r[1]
 
 
-def ranges_intersect_col(a_start: Column, a_end: Column, b_start: Column, b_end: Column) -> Column:
-    """Column form of the overlap predicate (the range-join condition)."""
-    return (a_start < b_end) & (b_start < a_end)
-
-
 # --- list helpers (reference helpers.py:65-87; C9/C10) --------------------
 
 

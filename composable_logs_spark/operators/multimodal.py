@@ -6,8 +6,8 @@ Design for 100 TB media processing on Spark:
   struct — never decoded at rest; parquet stores blobs column-oriented
   and predicate pushdown on metadata prunes before any byte touches
   Python.
-- Ingest: ``spark.read.format("binaryFile")`` (path, modificationTime,
-  length, content) or any table with a binary column.
+- Ingest: any table with a binary column, such as the ``content`` of
+  ``spark.read.format("binaryFile")``.
 - Processing: Arrow-batched ``mapInPandas`` — bytes cross the JVM→Python
   boundary once per batch, not per row. The default codec is the REAL
   dependency-free ``codecs.stdlib_codec`` (PNM images, WAV PCM audio,
@@ -49,28 +49,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Media ingest from a directory of files (binaryFile source —
-    distributed read, no driver pass)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select(
-            F.abs(F.xxhash64("path")).alias("media_id"),
-            F.lit("image").alias("kind"),
-            F.col("content").alias("payload"),
-            F.struct(
-                F.lit("application/octet-stream").alias("mime"),
-                F.lit(None).cast("int").alias("width"),
-                F.lit(None).cast("int").alias("height"),
-                F.lit(None).cast("long").alias("duration_ms"),
-                F.col("length").alias("n_bytes"),
-            ).alias("meta"),
-        )
-    )
 
 
 def synthetic_media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,15 @@ The tree is rendered in plain Python from the collected report
 small by construction (one workflow's artifacts). For bulk export of
 MANY runs use ``df.write.partitionBy("run_id")`` on the artifacts table
 instead.
+
+Plan, then write (``tree.py``): the whole tree is rendered first, as a
+map from relative path to bytes, in the order run metadata, then per
+task its metadata and artifacts; a later entry for the same path wins,
+so when two run ids share a directory name (``a.b`` and ``a/b`` are both
+``a-b``) the later run in report order wins file by file. The shared
+writer then writes it on a thread pool. A name that would leave
+``out_dir``, or a symlink already under it on a planned path, raises
+``ValueError`` naming the path; nothing lands outside ``out_dir``.
 """
 
 from __future__ import annotations
@@ -27,6 +36,9 @@ from pathlib import Path
 
 from ..plans.summarize import SpanSummary
 from .report import Report, collect_report
+from .tree import tree_path, write_tree
+
+_METADATA = "run-time-metadata.json"
 
 
 def _safe_name(s: str) -> str:
@@ -43,43 +55,23 @@ def _safe_artifact_name(s: str) -> str:
     return "_" if s in ("", ".", "..") else s
 
 
-def safe_path(base: Path, *parts: str) -> Path:
-    # is_relative_to, not str.startswith: a prefix check lets '../out2'
-    # escape to a sibling directory that shares the base's name prefix
-    # (/tmp/out -> /tmp/out2)
-    out = base.joinpath(*parts).resolve()
-    if not out.is_relative_to(base.resolve()):
-        raise ValueError(f"unsafe path escape: {parts}")
-    return out
-
-
-def write_spans_to_directory(summary: SpanSummary | Report, out_dir: str | Path) -> list[str]:
-    """Write the exploded per-task directory tree; returns created paths."""
-    base = Path(out_dir)
-    base.mkdir(parents=True, exist_ok=True)
-    created: list[str] = []
-
-    report = collect_report(summary)
+def _tree(report: Report) -> dict[str, bytes]:
+    """The directory tree as a ``write_tree`` plan."""
     workflows = {w["run_id"]: w for w in report.workflows}
 
-    # single run -> reference-identical layout directly at out_dir
-    def run_base(run_id: str) -> Path:
-        if len(workflows) == 1:
-            return base
-        return safe_path(base, _safe_name(run_id))
+    def run_dir(run_id: str) -> str:
+        # single run -> reference-identical layout directly at out_dir
+        return "" if len(workflows) == 1 else _safe_name(run_id)
 
+    files: dict[str, bytes] = {}
     for run_id, wf in workflows.items():
-        run_dir = run_base(run_id)
-        run_dir.mkdir(parents=True, exist_ok=True)
         meta = {
             "run_id": run_id,
             "duration_s": wf["duration_s"],
             "is_success": wf["is_success"],
             "attributes": wf["attributes"] or {},
         }
-        p = run_dir / "run-time-metadata.json"
-        p.write_text(json.dumps(meta, indent=2, default=str))
-        created.append(str(p))
+        files[tree_path(run_dir(run_id), _METADATA)] = _json(meta)
 
     for t in report.tasks:
         status = "OK" if t["is_success"] else "FAILED"
@@ -91,9 +83,7 @@ def write_spans_to_directory(summary: SpanSummary | Report, out_dir: str | Path)
                 status,
             ]
         )
-        rb = run_base(t["run_id"])
-        task_dir = safe_path(rb, dir_name)
-        task_dir.mkdir(parents=True, exist_ok=True)
+        task_dir = tree_path(run_dir(t["run_id"]), dir_name)
         meta = {
             "task_id": t["task_id"],
             "span_id": t["span_id"],
@@ -103,16 +93,23 @@ def write_spans_to_directory(summary: SpanSummary | Report, out_dir: str | Path)
             "attributes": t["attributes"] or {},
             "logged_values": report.task_values(t),
         }
-        p = task_dir / "run-time-metadata.json"
-        p.write_text(json.dumps(meta, indent=2, default=str))
-        created.append(str(p))
+        files[tree_path(task_dir, _METADATA)] = _json(meta)
 
         # artifacts live under an artifacts/ subdirectory
         # (cli_pynb_log_parser.py:76-81)
         for a in report.task_artifacts(t):
-            ap = safe_path(rb, dir_name, "artifacts", _safe_artifact_name(a["name"]))
-            ap.parent.mkdir(parents=True, exist_ok=True)
-            ap.write_bytes(bytes(a["content"]))
-            created.append(str(ap))
+            name = _safe_artifact_name(a["name"])
+            files[tree_path(task_dir, "artifacts", name)] = bytes(a["content"])
+    return files
 
-    return created
+
+def _json(meta: dict) -> bytes:
+    return json.dumps(meta, indent=2, default=str).encode()
+
+
+def write_spans_to_directory(summary: SpanSummary | Report, out_dir: str | Path) -> list[str]:
+    """Write the exploded per-task directory tree; returns the path of
+    every file written, joined onto ``out_dir`` as given."""
+    files = _tree(collect_report(summary))
+    write_tree(out_dir, files)
+    return [str(Path(out_dir, rel)) for rel in files]

@@ -7,6 +7,16 @@ www-root, plus per-span artifact directories.
 Rendered in plain Python from the collected report (``report.py``), the
 same one the directory and Mermaid sinks use: a per-run reporting
 dataset is small, so the sink itself runs no Spark.
+
+Plan, then write, with the directory sink's writer (``tree.py``): the
+whole www-root is rendered first, as a map from relative path to bytes
+(text as UTF-8, whatever the process's locale), in the order workflow
+files, task files, ``static_data.json``; a later entry for the same path
+wins, so when two run ids share a directory name the later run in report
+order wins file by file, while ``static_data.json`` keeps both runs'
+entries. The writer then writes it on a thread pool. A name that would
+leave ``www_root``, or a symlink already under it on a planned path,
+raises ``ValueError`` naming the path; nothing lands outside it.
 """
 
 from __future__ import annotations
@@ -15,9 +25,10 @@ import json
 from pathlib import Path
 
 from ..plans.summarize import SpanSummary
-from .directory import _safe_artifact_name, _safe_name, safe_path
+from .directory import _METADATA, _safe_artifact_name, _safe_name
 from .mermaid import make_mermaid_dag, make_mermaid_gantt
 from .report import Report, collect_report
+from .tree import tree_path, write_tree
 
 
 def write_static_data(
@@ -32,20 +43,24 @@ def write_static_data(
     (an extension; reference is one run per invocation, and span ids
     are only unique per run) nest each run's artifacts under a run_id
     subdirectory."""
-    root = Path(www_root)
-    root.mkdir(parents=True, exist_ok=True)
     report = collect_report(summary)
+    write_tree(www_root, _tree(report, with_mermaid))
+    return Path(www_root) / "static_data.json"
+
+
+def _tree(report: Report, with_mermaid: bool) -> dict[str, bytes]:
+    """The www-root as a ``write_tree`` plan."""
     single = len(report.workflows) == 1
     wf_span_of = {w["run_id"]: w["span_id"] for w in report.workflows}
 
-    def art_dir(run_id: str, kind: str, span_id: str) -> Path:
+    def art_dir(run_id: str, kind: str, span_id: str) -> str:
         run_part = () if single else (_safe_name(run_id),)
-        return safe_path(root, *run_part, "artifacts", kind, span_id)
+        return tree_path(*run_part, "artifacts", kind, span_id)
 
+    files: dict[str, bytes] = {}
     entries = []
     for wf in report.workflows:
         adir = art_dir(wf["run_id"], "workflow", wf["span_id"])
-        adir.mkdir(parents=True, exist_ok=True)
         names: list[str] = []
         if with_mermaid:
             for name, text in (
@@ -53,7 +68,7 @@ def write_static_data(
                 ("dag-nolinks.mmd", make_mermaid_dag(report, wf["run_id"], generate_links=False)),
                 ("gantt.mmd", make_mermaid_gantt(report, wf["run_id"])),
             ):
-                (adir / name).write_text(text)
+                files[tree_path(adir, name)] = text.encode()
                 names.append(name)
         wf_meta = {
             "run_id": wf["run_id"],
@@ -62,8 +77,8 @@ def write_static_data(
             "is_success": wf["is_success"],
             "attributes": dict(wf["attributes"] or {}),
         }
-        (adir / "run-time-metadata.json").write_text(json.dumps(wf_meta, indent=2))
-        names.append("run-time-metadata.json")
+        files[tree_path(adir, _METADATA)] = json.dumps(wf_meta, indent=2).encode()
+        names.append(_METADATA)
         entries.append(
             {
                 "entry_type": "workflow",
@@ -84,11 +99,10 @@ def write_static_data(
 
     for t in report.tasks:
         adir = art_dir(t["run_id"], "task", t["span_id"])
-        adir.mkdir(parents=True, exist_ok=True)
         names = []
         for a in report.task_artifacts(t):
             name = _safe_artifact_name(a["name"])
-            (adir / name).write_bytes(bytes(a["content"]))
+            files[tree_path(adir, name)] = bytes(a["content"])
             names.append(name)
         task_meta = {
             "run_id": t["run_id"],
@@ -98,8 +112,8 @@ def write_static_data(
             "is_success": t["is_success"],
             "attributes": dict(t["attributes"] or {}),
         }
-        (adir / "run-time-metadata.json").write_text(json.dumps(task_meta, indent=2))
-        names.append("run-time-metadata.json")
+        files[tree_path(adir, _METADATA)] = json.dumps(task_meta, indent=2).encode()
+        names.append(_METADATA)
         entries.append(
             {
                 "entry_type": "task",
@@ -119,6 +133,5 @@ def write_static_data(
             }
         )
 
-    out = root / "static_data.json"
-    out.write_text(json.dumps(entries, indent=2))
-    return out
+    files["static_data.json"] = json.dumps(entries, indent=2).encode()
+    return files

@@ -9,7 +9,10 @@ So the fixture mix is pinned twice: as the kernel's rows and as Spark
 collects them."""
 
 import hashlib
+import os
 import re
+import subprocess
+import sys
 from datetime import datetime
 from pathlib import Path
 
@@ -207,3 +210,44 @@ def test_sinks_refuse_a_symlink_out_of_the_root(tmp_path, sink, link):
     with pytest.raises(ValueError, match=re.escape(Path(link).name)):
         write(report, root)
     assert list(sibling.iterdir()) == []
+
+
+@pytest.mark.parametrize("name", ["fixture_mix", "hostile", "colliding_run_dirs"])
+def test_directory_sink_returns_each_file_once_under_out_dir(request, tmp_path, monkeypatch, name):
+    monkeypatch.chdir(tmp_path)
+    created = write_spans_to_directory(_INPUTS[name](request), "out")
+    assert all(Path(p).exists() for p in created)
+    assert sorted(created) == sorted(str(p) for p in Path("out").rglob("*") if p.is_file())
+
+
+_WRITE_FAILED_RUN = """
+import locale, sys
+from pathlib import Path
+from composable_logs_spark.sinks import write_spans_to_directory, write_static_data
+from composable_logs_spark.spanlog import fixtures as FX
+from test_sink_trees import report_without_spark
+report = report_without_spark(FX.parallel_fail(1))
+write_spans_to_directory(report, Path(sys.argv[1], "dir"))
+write_static_data(report, Path(sys.argv[1], "www"))
+print(locale.getpreferredencoding(False))
+"""
+
+
+def test_report_bytes_independent_of_locale(tmp_path):
+    tests = Path(__file__).parent
+    path = os.pathsep.join([str(tests.parent), str(tests)])
+    ascii_env = dict(LC_ALL="POSIX", PYTHONCOERCECLOCALE="0", PYTHONUTF8="0")
+    digests, encodings = [], []
+    for i, env in enumerate([ascii_env, dict(LC_ALL="C.UTF-8")]):
+        out = subprocess.run(
+            [sys.executable, "-c", _WRITE_FAILED_RUN, str(tmp_path / str(i))],
+            env=dict(os.environ, PYTHONPATH=path, **env),
+            capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr
+        encodings.append(out.stdout.split()[-1])
+        digests.append([tree_digest(tmp_path / str(i) / sink) for sink in ("dir", "www")])
+    assert encodings[0] == "ANSI_X3.4-1968" and encodings[1] == "UTF-8"
+    assert digests[0] == digests[1]
+    [dag] = (tmp_path / "0" / "www").glob("artifacts/workflow/*/dag.mmd")
+    assert "❌" in dag.read_text(encoding="utf-8")
