@@ -23,6 +23,7 @@ from composable_logs_spark.plans import summarize_spans
 from composable_logs_spark.plans.summarize import summarize_run
 from composable_logs_spark.sinks import write_spans_to_directory, write_static_data
 from composable_logs_spark.sinks.report import Report, build_report, collect_report
+from composable_logs_spark.sinks.tree import tree_path, write_tree
 from composable_logs_spark.spanlog.schema import MAX_SPANS_PER_RUN
 
 from conftest import spans_df
@@ -189,6 +190,20 @@ def test_colliding_run_dirs_later_run_wins(tmp_path):
     assert '"run_id": "a/b"' in (tmp_path / "dir" / "a-b" / "run-time-metadata.json").read_text()
     meta = tmp_path / "www" / "a-b" / "artifacts" / "task" / "t1" / "run-time-metadata.json"
     assert '"run_id": "a/b"' in meta.read_text()
+
+
+def test_write_tree_under_frequent_thread_switches(tmp_path):
+    # jobs of sibling directories race to create their shared parents
+    files = {tree_path(f"d{i % 7}", f"e{i % 13}", f"f{i}"): b"%d" % i for i in range(400)}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        write_tree(tmp_path / "t", files)
+    finally:
+        sys.setswitchinterval(old)
+    root = tmp_path / "t"
+    got = {p.relative_to(root).as_posix(): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+    assert got == files
 
 
 @pytest.mark.parametrize(
