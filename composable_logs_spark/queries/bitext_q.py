@@ -52,29 +52,16 @@ near-zero and exactly-zero dots and pins Spark == DuckDB == numpy.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import QuerySpec, load
-from .srp_lsh_q import _DIM, _PLANES, _PLANES_NP, _quantized_positive
+from .srp_lsh_q import _DIM, srp_band_sql_exprs, srp_bands
 
 _N_BANDS = 8
 _BAND_BITS = 8
 _K = 4
 _MARGIN_MILLI = 1200
-_BIT_WEIGHTS = 1 << np.arange(_BAND_BITS, dtype=np.int64)
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _bands_8x8(vec: pd.Series) -> pd.Series:
-    """All 64 plane dots in one matmul, packed 8 bands x 8 bits."""
-    mat = np.stack(vec.to_numpy())
-    bits = _quantized_positive(mat @ _PLANES_NP.T)
-    packed = bits.reshape(len(mat), _N_BANDS, _BAND_BITS) @ _BIT_WEIGHTS
-    return pd.Series(list(packed))
 
 
 def _side(e: DataFrame, parity: int, prefix: str) -> DataFrame:
@@ -85,7 +72,7 @@ def _side(e: DataFrame, parity: int, prefix: str) -> DataFrame:
             F.col("vec_id").alias(f"{prefix}_id"),
             F.col("vec").alias(f"{prefix}_vec"),
             norm.alias(f"{prefix}_nrm"),
-            _bands_8x8(F.col("vec")).alias("bands"),
+            srp_bands(_N_BANDS, _BAND_BITS)(F.col("vec")).alias("bands"),
         )
     )
 
@@ -173,25 +160,8 @@ def mine_bitext_margin(spark: SparkSession, sf: str) -> DataFrame:
     return best
 
 
-def _band_sql_exprs() -> list[str]:
-    """DuckDB expressions for the 8x8 banding of the shared planes."""
-    out = []
-    for k in range(_N_BANDS):
-        terms = []
-        for b in range(_BAND_BITS):
-            i = k * _BAND_BITS + b
-            coeffs = ", ".join(f"{float(c)}" for c in _PLANES[i])
-            terms.append(
-                f"CASE WHEN round(list_sum(list_transform(range(1, {_DIM + 1}), "
-                f"j -> vec[j] * ([{coeffs}])[j])) * 1000000, 0) > 0"
-                f" THEN {1 << b} ELSE 0 END"
-            )
-        out.append("(" + " + ".join(terms) + f") AS band{k}")
-    return out
-
-
 def _bitext_sql() -> str:
-    band_cols = ",\n         ".join(_band_sql_exprs())
+    band_cols = ",\n         ".join(srp_band_sql_exprs(_N_BANDS, _BAND_BITS))
     band_union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, {k} AS band_idx, band{k} AS band_val FROM sig"
         for k in range(_N_BANDS)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import QuerySpec, load
+from ..operators.lsh import banded_pairs, hamming
 
 _VARIANT_OFFSET = 100000
 
@@ -358,22 +359,6 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return sig.select("doc_id", "hashes", *_band_cols())
 
 
-def bands_long(sig: DataFrame) -> DataFrame:
-    """Explode a signature frame to (doc_id, band_idx, band_hash) rows —
-    the LSH bucket keys candidates equi-join on."""
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_hash"))
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("bnd"),
-    ).select("doc_id", "bnd.band_idx", "bnd.band_hash")
-
-
 def jaccard_col(a: str, b: str):
     """Exact Jaccard over the hashed shingle sets (31-bit md5 prefixes:
     identical on both engines; within-doc collisions removed by
@@ -401,15 +386,9 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     # Catalyst re-derives shingles+md5 from text for each consumer
     sig = minhash_signatures(docs.select("doc_id", "text")).cache()
 
-    # candidates: docs sharing any band value (explode -> equi-join on
-    # (band_idx, band_hash) -> distinct pairs). Pure equi-join: no O(n^2).
-    bl = bands_long(sig)
-    cand = (
-        bl.alias("a")
-        .join(bl.alias("b"), ["band_idx", "band_hash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    # candidates: docs sharing any band value
+    cand = banded_pairs(
+        sig, "doc_id", [F.col(f"band{b}") for b in range(_BANDS)], ("doc_a", "doc_b")
     )
 
     sh = sig.select("doc_id", "hashes")
@@ -512,14 +491,7 @@ def dedup_minhash_est_error(spark: SparkSession, sf: str) -> DataFrame:
         _near_dup_corpus(spark, sf).select("doc_id", "text")
     ).cache()
 
-    bl = bands_long(sig.select("doc_id", *_band_cols()))
-    cand = (
-        bl.alias("a")
-        .join(bl.alias("b"), ["band_idx", "band_hash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = banded_pairs(sig, "doc_id", _band_cols(), ("doc_a", "doc_b"))
 
     feat = sig.select(
         "doc_id",
@@ -753,50 +725,23 @@ def _simhash_sig_expr(corpus: DataFrame) -> DataFrame:
     )
 
 
+def simhash_bands() -> list:
+    """The eight 8-bit bands of a (sim_lo, sim_hi) signature: bytes 0-3
+    of sim_lo, then bytes 0-3 of sim_hi."""
+    return [
+        F.shiftright(F.col("sim_lo" if b < 4 else "sim_hi"), 8 * (b % 4))
+        .bitwiseAND(F.lit(255))
+        .cast("int")
+        for b in range(8)
+    ]
+
+
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    corpus = _near_dup_corpus(spark, sf)
-    sig = _simhash_sig(corpus)
-
-    buckets = sig.select(
-        "doc_id",
-        "sim_lo",
-        "sim_hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("probe"),
-                        F.shiftright(F.col("sim_lo" if b < 4 else "sim_hi"), 8 * (b % 4))
-                        .bitwiseAND(F.lit(255))
-                        .cast("int")
-                        .alias("bucket"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sim_lo", "sim_hi", "bk.probe", "bk.bucket")
-
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["probe", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sim_lo").alias("lo_a"),
-            F.col("a.sim_hi").alias("hi_a"),
-            F.col("b.sim_lo").alias("lo_b"),
-            F.col("b.sim_hi").alias("hi_b"),
-        )
-        .distinct()
-    )
-    hamming = (
-        F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-        + F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-    ).cast("int")
+    sig = _simhash_sig(_near_dup_corpus(spark, sf))
+    words = ("sim_lo", "sim_hi")
     return (
-        cand.withColumn("hamming", hamming)
+        banded_pairs(sig, "doc_id", simhash_bands(), ("doc_a", "doc_b"), carry=words)
+        .withColumn("hamming", hamming(words))
         .where(F.col("hamming") <= _HAMMING_MAX)
         .select("doc_a", "doc_b", "hamming")
     )
@@ -943,7 +888,7 @@ WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
 # matmul; the candidate dedup shuffles id pairs only, vectors are
 # re-attached after.
 def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    from .srp_lsh_q import _srp_band_values
+    from .srp_lsh_q import _BAND_BITS, _N_BANDS, srp_bands
 
     e = load(spark, sf, "embeddings")
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -959,27 +904,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     norm = F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda a, x: a + x * x))
     sig = (
         corpus.withColumn("norm", norm)
-        .withColumn("bands", _srp_band_values(F.col("vec")))
+        .withColumn("bands", srp_bands(_N_BANDS, _BAND_BITS)(F.col("vec")))
         .cache()
     )
-    buckets = sig.select(
-        "vec_id", "label", F.posexplode("bands").alias("band_idx", "band_val")
-    )
-    cand_ids = (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.label").alias("label"),
-        )
-        .distinct()
+    cand_ids = banded_pairs(
+        sig,
+        "vec_id",
+        [F.col("bands")[k] for k in range(_N_BANDS)],
+        ("vec_a", "vec_b"),
+        keys=("label",),
     )
     lhs = sig.select(
         F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("norm").alias("na")
@@ -1002,9 +935,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _emb_dedup_sql() -> str:
-    from .srp_lsh_q import _N_BANDS, srp_band_sql_exprs
+    from .srp_lsh_q import _BAND_BITS, _N_BANDS, srp_band_sql_exprs
 
-    band_cols = ",\n         ".join(srp_band_sql_exprs())
+    band_cols = ",\n         ".join(srp_band_sql_exprs(_N_BANDS, _BAND_BITS))
     band_union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, label, {k} AS band_idx, band{k} AS band_val FROM sig"
         for k in range(_N_BANDS)

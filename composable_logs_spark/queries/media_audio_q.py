@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from . import QuerySpec, load
 from ..operators.codecs import encode_wav, stdlib_codec
+from ..operators.lsh import banded_pairs, hamming
 
 _RATE = 8000
 _N_SAMPLES = 1024  # 128 ms per track
@@ -242,62 +243,22 @@ def audio_signatures(media: DataFrame) -> DataFrame:
     )
 
 
-def audio_band_buckets(sig: DataFrame) -> DataFrame:
-    """One row per 15-bit band key over the packed 61-bit signature,
-    the bucket side of the batch self-join."""
-    comb = F.col("fp1") + F.col("fp2") * F.lit(1 << _FP2_SHIFT)
-    return sig.select(
-        "media_id",
-        "fp1",
-        "fp2",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("probe"),
-                        F.shiftright(comb, _AUDIO_BAND_BITS * k)
-                        .bitwiseAND(F.lit((1 << _AUDIO_BAND_BITS) - 1))
-                        .cast("int")
-                        .alias("bucket"),
-                    )
-                    for k in range(_AUDIO_N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "fp1", "fp2", "bk.probe", "bk.bucket")
-
-
-def audio_hamming_col(fp1_a, fp2_a, fp1_b, fp2_b):
-    """Exact Hamming distance over both signature words."""
-    return (
-        F.bit_count(F.col(fp1_a).bitwiseXOR(F.col(fp1_b)))
-        + F.bit_count(F.col(fp2_a).bitwiseXOR(F.col(fp2_b)))
-    ).cast("int")
-
-
 def audio_neardup_pairs(
     sig: DataFrame, hamming_max: int = _AUDIO_HAMMING_MAX
 ) -> DataFrame:
-    """Band-then-verify over any (media_id, fp1, fp2) frame."""
-    buckets = audio_band_buckets(sig)
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["probe", "bucket"])
-        .where(F.col("a.media_id") < F.col("b.media_id"))
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.fp1").alias("fp1_a"),
-            F.col("a.fp2").alias("fp2_a"),
-            F.col("b.fp1").alias("fp1_b"),
-            F.col("b.fp2").alias("fp2_b"),
-        )
-        .distinct()
-    )
+    """Band-then-verify over any (media_id, fp1, fp2) frame: 15-bit
+    bands of the packed 61-bit signature."""
+    comb = F.col("fp1") + F.col("fp2") * F.lit(1 << _FP2_SHIFT)
+    bands = [
+        F.shiftright(comb, _AUDIO_BAND_BITS * k)
+        .bitwiseAND(F.lit((1 << _AUDIO_BAND_BITS) - 1))
+        .cast("int")
+        for k in range(_AUDIO_N_BANDS)
+    ]
+    words = ("fp1", "fp2")
     return (
-        cand.withColumn(
-            "hamming", audio_hamming_col("fp1_a", "fp2_a", "fp1_b", "fp2_b")
-        )
+        banded_pairs(sig, "media_id", bands, ("media_a", "media_b"), carry=words)
+        .withColumn("hamming", hamming(words))
         .where(F.col("hamming") <= hamming_max)
         .select("media_a", "media_b", "hamming")
     )

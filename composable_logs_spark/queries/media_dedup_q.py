@@ -56,6 +56,8 @@ from pyspark.sql import functions as F
 
 from . import QuerySpec, load
 from ..operators.codecs import _resize_nearest, decode_pnm, encode_pnm
+from ..operators.lsh import banded_pairs, hamming
+from .dedup_q import simhash_bands
 
 _SIDE = 16  # source raster is _SIDE x _SIDE grayscale
 _HASH_SIDE = 8  # aHash grid
@@ -139,60 +141,13 @@ def ahash_signatures(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, "media_id long, sim_lo long, sim_hi long")
 
 
-def ahash_band_buckets(sig: DataFrame) -> DataFrame:
-    """(media_id, sim_lo, sim_hi) -> one row per 8-bit band key: the
-    SimHash-style bucket explode of the batch self-join."""
-    return sig.select(
-        "media_id",
-        "sim_lo",
-        "sim_hi",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("probe"),
-                        F.shiftright(
-                            F.col("sim_lo" if b < 4 else "sim_hi"), 8 * (b % 4)
-                        )
-                        .bitwiseAND(F.lit(255))
-                        .cast("int")
-                        .alias("bucket"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "sim_lo", "sim_hi", "bk.probe", "bk.bucket")
-
-
-def hamming_col(lo_a, hi_a, lo_b, hi_b):
-    """Exact 64-bit Hamming distance between two split signatures."""
-    return (
-        F.bit_count(F.col(lo_a).bitwiseXOR(F.col(lo_b)))
-        + F.bit_count(F.col(hi_a).bitwiseXOR(F.col(hi_b)))
-    ).cast("int")
-
-
 def phash_neardup_pairs(sig: DataFrame, hamming_max: int = _HAMMING_MAX) -> DataFrame:
     """Band-then-verify over any (media_id, sim_lo, sim_hi) signature
     frame — the dedup_simhash candidate plan verbatim."""
-    buckets = ahash_band_buckets(sig)
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["probe", "bucket"])
-        .where(F.col("a.media_id") < F.col("b.media_id"))
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.sim_lo").alias("lo_a"),
-            F.col("a.sim_hi").alias("hi_a"),
-            F.col("b.sim_lo").alias("lo_b"),
-            F.col("b.sim_hi").alias("hi_b"),
-        )
-        .distinct()
-    )
+    words = ("sim_lo", "sim_hi")
     return (
-        cand.withColumn("hamming", hamming_col("lo_a", "hi_a", "lo_b", "hi_b"))
+        banded_pairs(sig, "media_id", simhash_bands(), ("media_a", "media_b"), carry=words)
+        .withColumn("hamming", hamming(words))
         .where(F.col("hamming") <= hamming_max)
         .select("media_a", "media_b", "hamming")
     )
@@ -320,66 +275,22 @@ def ahash256_signatures(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(run, schema)
 
 
-def ahash256_band_buckets(sig: DataFrame) -> DataFrame:
-    """One row per 32-bit band key (= one signature word)."""
-    words = [f"w{k}" for k in range(_WIDE_WORDS)]
-    return sig.select(
-        "media_id",
-        *words,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("probe"), F.col(f"w{k}").alias("bucket")
-                    )
-                    for k in range(_WIDE_WORDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", *words, "bk.probe", "bk.bucket")
-
-
-def ahash256_hamming_col(prefix_a: str, prefix_b: str):
-    """Exact 256-bit Hamming over the eight word pairs."""
-    total = None
-    for k in range(_WIDE_WORDS):
-        term = F.bit_count(
-            F.col(f"{prefix_a}{k}").bitwiseXOR(F.col(f"{prefix_b}{k}"))
-        )
-        total = term if total is None else total + term
-    return total.cast("int")
-
-
-def ahash256_neardup_pairs(
-    sig: DataFrame, hamming_max: int = _WIDE_HAMMING_MAX
-) -> DataFrame:
-    buckets = ahash256_band_buckets(sig)
-    cand = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["probe", "bucket"])
-        .where(F.col("a.media_id") < F.col("b.media_id"))
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            *[F.col(f"a.w{k}").alias(f"wa{k}") for k in range(_WIDE_WORDS)],
-            *[F.col(f"b.w{k}").alias(f"wb{k}") for k in range(_WIDE_WORDS)],
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", ahash256_hamming_col("wa", "wb"))
-        .where(F.col("hamming") <= hamming_max)
-        .select("media_a", "media_b", "hamming")
-    )
-
-
 def media_phash_neardup_wide(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents")
     media = pnm_corpus_from_documents(docs)
     # 32-byte/row signatures, read by both sides of the band self-join
-    # (the media_phash_neardup cache discipline)
+    # (the media_phash_neardup cache discipline); each word is a band
     sig = ahash256_signatures(media).cache()
-    return ahash256_neardup_pairs(sig).orderBy("media_a", "media_b")
+    words = [f"w{k}" for k in range(_WIDE_WORDS)]
+    return (
+        banded_pairs(
+            sig, "media_id", [F.col(w) for w in words], ("media_a", "media_b"), carry=words
+        )
+        .withColumn("hamming", hamming(words))
+        .where(F.col("hamming") <= _WIDE_HAMMING_MAX)
+        .select("media_a", "media_b", "hamming")
+        .orderBy("media_a", "media_b")
+    )
 
 
 def _phash_wide_sql() -> str:

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import QuerySpec, load
-from .media_dedup_q import hamming_col
+from ..operators.lsh import hamming
 from .multimodal_q import scene_fingerprints
 
 _KF_OFFSET = 2_000_000
@@ -242,21 +242,21 @@ def media_keyframe_spatial_neardup(spark: SparkSession, sf: str) -> DataFrame:
         F.col("n_cuts").alias("n_cuts"),
         "cut_md5",
         "at",
-        F.col("kf_lo").alias("lo_a"),
-        F.col("kf_hi").alias("hi_a"),
+        F.col("kf_lo").alias("kf_lo_a"),
+        F.col("kf_hi").alias("kf_hi_a"),
     )
     b = kf.select(
         F.col("media_id").alias("media_b"),
         "n_frames",
         "cut_md5",
         "at",
-        F.col("kf_lo").alias("lo_b"),
-        F.col("kf_hi").alias("hi_b"),
+        F.col("kf_lo").alias("kf_lo_b"),
+        F.col("kf_hi").alias("kf_hi_b"),
     )
     return (
         a.join(b, ["n_frames", "cut_md5", "at"])
         .where(F.col("media_a") < F.col("media_b"))
-        .withColumn("h", hamming_col("lo_a", "hi_a", "lo_b", "hi_b"))
+        .withColumn("h", hamming(("kf_lo", "kf_hi")))
         .groupBy("media_a", "media_b", "n_frames", "n_cuts")
         .agg(
             F.count("*").cast("long").alias("n_keyframes"),

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import QuerySpec, load
+from ..operators.lsh import banded_pairs
 
 _N_PLANES = 64
 _N_BANDS = 4
@@ -63,7 +64,6 @@ def _rademacher(plane: int, dim: int) -> int:
 
 _PLANES = [[_rademacher(i, d) for d in range(_DIM)] for i in range(_N_PLANES)]
 _PLANES_NP = np.array(_PLANES, dtype=np.float64)  # (_N_PLANES, _DIM)
-_BIT_WEIGHTS = (1 << np.arange(_BAND_BITS, dtype=np.int64))
 _DOT_SCALE = 1e6  # micro-unit grid for the quantized sign test
 
 
@@ -77,13 +77,20 @@ def _quantized_positive(dots: np.ndarray) -> np.ndarray:
     return np.floor(np.abs(dots) * _DOT_SCALE + 0.5) * np.sign(dots) > 0
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _srp_band_values(vec: pd.Series) -> pd.Series:
-    """All 64 plane dots per vector in one matmul; bits packed per band."""
-    mat = np.stack(vec.to_numpy())  # (n, _DIM) float64
-    bits = _quantized_positive(mat @ _PLANES_NP.T)  # (n, _N_PLANES) bool
-    packed = bits.reshape(len(mat), _N_BANDS, _BAND_BITS) @ _BIT_WEIGHTS  # (n, _N_BANDS)
-    return pd.Series(list(packed))
+def srp_bands(n_bands: int, band_bits: int):
+    """A pandas UDF: vec -> the 64 plane bits packed into ``n_bands``
+    bands of ``band_bits`` bits (n_bands * band_bits == _N_PLANES), all
+    plane dots per vector in one matmul."""
+    weights = 1 << np.arange(band_bits, dtype=np.int64)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def bands(vec: pd.Series) -> pd.Series:
+        mat = np.stack(vec.to_numpy())  # (n, _DIM) float64
+        bits = _quantized_positive(mat @ _PLANES_NP.T)  # (n, _N_PLANES) bool
+        packed = bits.reshape(len(mat), n_bands, band_bits) @ weights  # (n, n_bands)
+        return pd.Series(list(packed))
+
+    return bands
 
 
 def _corpus(spark: SparkSession, sf: str) -> DataFrame:
@@ -104,24 +111,13 @@ def dedup_srp_lsh(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id",
         "vec",
         norm.alias("nrm"),
-        _srp_band_values(F.col("vec")).alias("bands"),
+        srp_bands(_N_BANDS, _BAND_BITS)(F.col("vec")).alias("bands"),
     ).cache()
 
-    buckets = sig.select(
-        "vec_id", F.posexplode("bands").alias("band_idx", "band_val")
-    )
-    # id-only candidate pairs, deduped (a pair can collide in >1 band)
-    # before the wide vectors are re-attached
-    cand_ids = (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    # id-only candidate pairs, deduped before the wide vectors are
+    # re-attached
+    cand_ids = banded_pairs(
+        sig, "vec_id", [F.col("bands")[k] for k in range(_N_BANDS)], ("vec_a", "vec_b")
     )
     lhs = sig.select(
         F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
@@ -142,14 +138,15 @@ def dedup_srp_lsh(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def srp_band_sql_exprs() -> list[str]:
-    """DuckDB expressions computing the same per-band packed bit values
-    as ``_srp_band_values`` over a DOUBLE[] column named ``vec``."""
+def srp_band_sql_exprs(n_bands: int, band_bits: int) -> list[str]:
+    """DuckDB expressions ``band0..band{n_bands-1}`` computing the same
+    packed bit values as ``srp_bands(n_bands, band_bits)`` over a
+    DOUBLE[] column named ``vec``."""
     band_exprs = []
-    for k in range(_N_BANDS):
+    for k in range(n_bands):
         terms = []
-        for b in range(_BAND_BITS):
-            i = k * _BAND_BITS + b
+        for b in range(band_bits):
+            i = k * band_bits + b
             coeffs = ", ".join(f"{float(c)}" for c in _PLANES[i])
             terms.append(
                 f"CASE WHEN round(list_sum(list_transform(range(1, {_DIM + 1}), "
@@ -161,7 +158,7 @@ def srp_band_sql_exprs() -> list[str]:
 
 
 def _srp_sql() -> str:
-    band_cols = ",\n         ".join(srp_band_sql_exprs())
+    band_cols = ",\n         ".join(srp_band_sql_exprs(_N_BANDS, _BAND_BITS))
     band_union = "\n  UNION ALL\n  ".join(
         f"SELECT vec_id, {k} AS band_idx, band{k} AS band_val FROM sig"
         for k in range(_N_BANDS)

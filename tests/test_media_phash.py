@@ -91,11 +91,12 @@ def test_wide_ahash_finds_planted_pairs_with_narrow_buckets(spark, sf_dir):
     size the +3 perturbation never crosses a boundary, so Hamming 0 —
     and the 32-bit band keys admit far fewer raw candidates than the
     8-bit banding on the same corpus."""
+    from composable_logs_spark.operators.lsh import BAND, BUCKET, band_rows
+    from composable_logs_spark.queries.dedup_q import simhash_bands
     from composable_logs_spark.queries.media_dedup_q import (
         _VARIANT_OFFSET,
-        ahash256_band_buckets,
+        _WIDE_WORDS,
         ahash256_signatures,
-        ahash_band_buckets,
         ahash_signatures,
         media_phash_neardup_wide,
     )
@@ -112,15 +113,17 @@ def test_wide_ahash_finds_planted_pairs_with_narrow_buckets(spark, sf_dir):
 
     media = pnm_corpus_from_documents(docs.select("doc_id", "text"))
 
-    def raw_candidates(bucket_fn, sig_fn):
-        b = bucket_fn(sig_fn(media))
+    def raw_candidates(sig, bands):
+        b = band_rows(sig, "media_id", bands)
         return (
             b.alias("a")
-            .join(b.alias("b"), ["probe", "bucket"])
+            .join(b.alias("b"), [BAND, BUCKET])
             .where(F.col("a.media_id") < F.col("b.media_id"))
             .count()
         )
 
-    wide = raw_candidates(ahash256_band_buckets, ahash256_signatures)
-    narrow = raw_candidates(ahash_band_buckets, ahash_signatures)
+    wide = raw_candidates(
+        ahash256_signatures(media), [F.col(f"w{k}") for k in range(_WIDE_WORDS)]
+    )
+    narrow = raw_candidates(ahash_signatures(media), simhash_bands())
     assert wide < narrow / 5, (wide, narrow)

@@ -8,13 +8,14 @@ import duckdb
 import numpy as np
 
 from composable_logs_spark.queries.srp_lsh_q import (
+    _BAND_BITS,
     _DIM,
     _N_BANDS,
     _PLANES,
     _PLANES_NP,
     _quantized_positive,
-    _srp_band_values,
     srp_band_sql_exprs,
+    srp_bands,
 )
 
 
@@ -50,7 +51,7 @@ def _duckdb_bands(vecs):
     con.execute("CREATE TABLE v(vec_id BIGINT, vec DOUBLE[])")
     for i, v in enumerate(vecs):
         con.execute("INSERT INTO v VALUES (?, ?)", [i, [float(x) for x in v]])
-    cols = ",\n".join(srp_band_sql_exprs())
+    cols = ",\n".join(srp_band_sql_exprs(_N_BANDS, _BAND_BITS))
     rows = con.execute(f"SELECT vec_id, {cols} FROM v ORDER BY vec_id").fetchall()
     return {r[0]: list(r[1:]) for r in rows}
 
@@ -69,9 +70,9 @@ def test_planted_knife_edge_dots_band_identically(spark):
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id: long, vec: array<double>",
     )
+    bands = srp_bands(_N_BANDS, _BAND_BITS)("vec").alias("bands")
     got_spark = {
-        r["vec_id"]: list(r["bands"])
-        for r in df.select("vec_id", _srp_band_values("vec").alias("bands")).collect()
+        r["vec_id"]: list(r["bands"]) for r in df.select("vec_id", bands).collect()
     }
     # DuckDB band expressions
     got_duck = _duckdb_bands(vecs)
