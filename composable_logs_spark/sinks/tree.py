@@ -13,6 +13,10 @@ refuses a symlink anywhere under the root on a planned path: each
 directory component is checked once, when ``mkdir`` finds it already
 there, and each file is opened with ``O_NOFOLLOW``. The root itself may
 be a symlink.
+
+Planned paths are written as UTF-8 bytes whatever the process's locale:
+under an ASCII filesystem encoding ``os.mkdir("ingest-\u00fc")`` raises
+``UnicodeEncodeError``, and the tree's bytes would depend on the locale.
 """
 
 from __future__ import annotations
@@ -35,27 +39,29 @@ def tree_path(*parts: str) -> str:
     return rel
 
 
-def _symlink_error(root: str, rel: str) -> ValueError:
-    return ValueError(f"unsafe path escape: {rel!r} under {root} is a symlink")
+def _symlink_error(root: bytes, rel: bytes) -> ValueError:
+    return ValueError(
+        f"unsafe path escape: {rel.decode()!r} under {os.fsdecode(root)} is a symlink"
+    )
 
 
 def write_tree(root: str | Path, files: dict[str, bytes]) -> None:
     """Create ``root`` and write every ``files`` entry (``tree_path`` ->
     bytes) under it, one pool job per directory."""
-    root = os.fspath(root)
+    root = os.fsencode(root)
     os.makedirs(root, exist_ok=True)
-    by_dir: dict[str, list[tuple[str, bytes]]] = {}
+    by_dir: dict[bytes, list[tuple[bytes, bytes]]] = {}
     for rel, data in files.items():
-        parent, _, name = rel.rpartition("/")
+        parent, _, name = rel.encode("utf-8").rpartition(b"/")
         by_dir.setdefault(parent, []).append((name, data))
     # directories known to be real directories under the root; two jobs
     # that race on one only repeat its check
-    made = {""}
+    made = {b""}
 
-    def make_dirs(rel: str) -> None:
+    def make_dirs(rel: bytes) -> None:
         if rel in made:
             return
-        make_dirs(rel.rpartition("/")[0])
+        make_dirs(rel.rpartition(b"/")[0])
         try:
             os.mkdir(os.path.join(root, rel))
         except FileExistsError:
@@ -63,7 +69,7 @@ def write_tree(root: str | Path, files: dict[str, bytes]) -> None:
                 raise _symlink_error(root, rel) from None
         made.add(rel)
 
-    def write_dir(rel: str, entries: list[tuple[str, bytes]]) -> None:
+    def write_dir(rel: bytes, entries: list[tuple[bytes, bytes]]) -> None:
         make_dirs(rel)
         for name, data in entries:
             path = os.path.join(root, rel, name)

@@ -122,7 +122,7 @@ def tree_digest(root: Path) -> str:
     under ``root``, in path order."""
     h = hashlib.sha256()
     for p in sorted(root.rglob("*"), key=lambda p: p.relative_to(root).as_posix()):
-        rel = p.relative_to(root).as_posix().encode()
+        rel = os.fsencode(p.relative_to(root).as_posix())
         if p.is_dir():
             h.update(b"d" + len(rel).to_bytes(4, "big") + rel)
         else:
@@ -241,7 +241,9 @@ from pathlib import Path
 from composable_logs_spark.sinks import write_spans_to_directory, write_static_data
 from composable_logs_spark.spanlog import fixtures as FX
 from test_sink_trees import report_without_spark
-report = report_without_spark(FX.parallel_fail(1))
+b = FX.SpanFixtureBuilder(2, {"env": "umlaut"})
+b.add_task("ingest-\\u00fc", 0.0, 1.0, artifacts={"bericht-\\u00e4.txt": "gr\\u00fc\\u00dfe"})
+report = report_without_spark(FX.parallel_fail(1) + b.build())
 write_spans_to_directory(report, Path(sys.argv[1], "dir"))
 write_static_data(report, Path(sys.argv[1], "www"))
 print(locale.getpreferredencoding(False))
@@ -264,5 +266,8 @@ def test_report_bytes_independent_of_locale(tmp_path):
         digests.append([tree_digest(tmp_path / str(i) / sink) for sink in ("dir", "www")])
     assert encodings[0] == "ANSI_X3.4-1968" and encodings[1] == "UTF-8"
     assert digests[0] == digests[1]
-    [dag] = (tmp_path / "0" / "www").glob("artifacts/workflow/*/dag.mmd")
-    assert "❌" in dag.read_text(encoding="utf-8")
+    dags = (tmp_path / "0" / "www").rglob("dag.mmd")
+    assert any("❌" in dag.read_text(encoding="utf-8") for dag in dags)
+    names = [os.fsencode(p.name) for p in (tmp_path / "0").rglob("*")]
+    assert b"python-task--ingest-\xc3\xbc--0x0000000000000002--OK" in names
+    assert b"bericht-\xc3\xa4.txt" in names
