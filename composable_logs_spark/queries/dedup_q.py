@@ -230,7 +230,7 @@ def minhash_mh(docs: DataFrame) -> DataFrame:
     shingle slots with '' exactly like the zip_with/coalesce
     construction, and both distincts keep first-occurrence order.
 
-    Reused by ``minhash_signatures`` (production banding) and the
+    Reused by ``minhash_pairs`` (production banding) and the
     band-parameter sweep below.
     """
 
@@ -352,13 +352,6 @@ def _band_cols() -> list:
     ]
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, hashes, band0..band{B-1}) at the
-    production (b=4, r=3) banding."""
-    sig = minhash_mh(docs)
-    return sig.select("doc_id", "hashes", *_band_cols())
-
-
 def jaccard_col(a: str, b: str):
     """Exact Jaccard over the hashed shingle sets (31-bit md5 prefixes:
     identical on both engines; within-doc collisions removed by
@@ -384,7 +377,8 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     # cache HERE (hashes + band keys, no raw shingle strings): both the
     # banding pass and the verify join read sig — without the cache
     # Catalyst re-derives shingles+md5 from text for each consumer
-    sig = minhash_signatures(docs.select("doc_id", "text")).cache()
+    sig = minhash_mh(docs.select("doc_id", "text"))
+    sig = sig.select("doc_id", "hashes", *_band_cols()).cache()
 
     # candidates: docs sharing any band value
     cand = banded_pairs(
