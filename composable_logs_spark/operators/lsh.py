@@ -1,5 +1,5 @@
-"""Banded LSH candidates: the filter step of every filter-then-verify
-near-dup query.
+"""Banded LSH candidates: the filter step of the filter-then-verify
+near-dup queries that self-join one signature frame.
 
 A signature is cut into bands; two rows are candidates when they hold
 the same value in the same band. ``banded_pairs`` turns that into one
